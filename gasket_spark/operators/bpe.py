@@ -1,22 +1,24 @@
-"""Distributed BPE tokenizer training — the merge-table build.
+"""BPE tokenizer training and encoding — the merge-table build.
 
 Byte-pair encoding's training loop (count adjacent symbol pairs →
-take the most frequent → merge it everywhere → repeat) re-expressed
-as DataFrame rounds over the DISTINCT-WORD table, the shape that
-makes it 100 TB-viable:
+take the most frequent → merge it everywhere → repeat) runs as ONE
+Spark aggregation plus an in-memory loop over the DISTINCT-WORD
+table, the shape standard BPE trainers use:
 
-* the corpus is scanned ONCE into (word, freq) — everything after
-  runs at vocabulary grain, orders of magnitude smaller than the
-  corpus, with every pair count weighted by the word frequency
-  (identical statistics to scanning raw text);
-* each round's pair counting is one explode + two-phase aggregate;
-  the winning pair is a bounded 1-row driver scalar (the
-  q_graph_bfs root precedent);
+* the corpus is scanned ONCE into (freq, sym) — one row per distinct
+  word, every pair count weighted by the word frequency (identical
+  statistics to scanning raw text) — and collected: the vocabulary is
+  orders of magnitude smaller than the corpus, and a loud size guard
+  (``BPE_MAX_WORDS``) bounds what reaches the driver;
+* every round then runs on the driver: frequency-weighted pair
+  counts, the argmax, and the merge;
 * the merge APPLIES as plain string ``replace`` on a space-padded
   symbol encoding (" l o w " — symbols never contain spaces, so
-  " l o " can only match a real symbol boundary): entirely JVM-side,
-  no Python in the loop, and restatable verbatim in ANSI SQL — the
-  property that makes the whole training run oracle-checkable.
+  " l o " can only match a real symbol boundary). Python's
+  ``str.replace``, the JVM's ``replace`` and DuckDB's ``replace`` are
+  the same left-to-right non-overlapping rewrite, so the loop is
+  restatable verbatim in ANSI SQL (the oracle) and in a map-side JVM
+  expression chain (the encoder).
 
 Replace-vs-greedy subtlety (worth its paragraph): a single
 left-to-right non-overlapping ``replace`` pass can MISS occurrences
@@ -55,6 +57,11 @@ def _padded_symbols(word_col: str) -> F.Column:
                     F.lit(" "))
 
 
+# Size contract of the driver-side merge loop: the distinct-word
+# table is collected to the driver, one (freq, sym) row per word.
+BPE_MAX_WORDS = 2_000_000
+
+
 def bpe_merge_table(df: DataFrame, text_col: str = "text",
                     n_merges: int = 8, passes: int = 4) -> list[tuple]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the
@@ -65,89 +72,53 @@ def bpe_merge_table(df: DataFrame, text_col: str = "text",
     ``passes`` bounds the per-round replace fixpoint (exact for
     same-pair runs up to 2^passes symbols; guarded loudly beyond).
 
-    Job shape (r14 optimization round): the loop runs at VOCABULARY
-    grain — tiny next to the corpus (31 rows at the sf0.1 fixture) —
-    so its cost is per-JOB overhead, not data. Three levers vs the
-    r13 form (3 jobs/round × 32 tasks each over localCheckpoints):
-
-    * the word state lives in lazy ``persist``s; each round's
-      residual check is the SAME job that fills the new state's
-      cache (one pass does both), so a round costs 2 jobs (argmax +
-      residual/materialize), not 3 (argmax + checkpoint + residual);
-    * the state is ``coalesce``d to a partition count derived from
-      the TRUE vocabulary size (one row per ~50k words, clamped to
-      4×parallelism — the graph-loop _loop_partitions posture:
-      partitioning from data, never the shuffle constant), so the
-      sf0.1 loop runs 1-task jobs instead of 32-task ones while a
-      100 TB vocabulary keeps its fan-out (coalesce never grows);
-    * the previous round's cache is unpersisted only AFTER the next
-      state materializes, so no round recomputes the chain.
-
-    Same rounds, same argmax, same fixpoint guard — bit-identical
-    merges (the cross-engine and property tests pin them)."""
-    spark = df.sparkSession
-    base = (df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
+    Shape: ONE Spark aggregation, then a Python loop. The corpus is
+    counted into (freq, sym) at vocabulary grain — ``sym`` built by
+    :func:`_padded_symbols`, the same starting symbols the SQL twin
+    and the encoder use — and collected; more than ``BPE_MAX_WORDS``
+    distinct words raise instead of flooding the driver. Every round
+    then runs on the collected table: frequency-weighted pair counts,
+    the argmax (count descending, then pair ascending by UTF-8 byte
+    order — Spark's string order), and the same ``passes`` chained
+    ``str.replace`` calls the JVM form applied, with the same residual
+    check. The job count is independent of ``n_merges``."""
+    rows = (df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
             .filter(F.col("w") != "")
             .groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-            .select(F.col("freq"), _padded_symbols("w").alias("sym"))
-            .persist())
-    n_words = base.count()
-    cap = spark.sparkContext.defaultParallelism * 4
-    n_parts = max(1, min(-(-n_words // 50_000), cap))
-    words = base.coalesce(n_parts).persist()
-    base_live = True
+            .select("freq", _padded_symbols("w").alias("sym"))
+            .limit(BPE_MAX_WORDS + 1).collect())
+    if len(rows) > BPE_MAX_WORDS:
+        raise ValueError(
+            f"bpe_merge_table: more than BPE_MAX_WORDS={BPE_MAX_WORDS} "
+            "distinct words — the merge loop holds the whole vocabulary "
+            "on the driver")
+    words = [(r.freq, r.sym) for r in rows]
     merges: list[tuple] = []
     for rank in range(n_merges):
-        syms = F.split(F.trim(F.col("sym")), " ")
-        pair_idx = F.when(F.size(syms) >= 2,
-                          F.sequence(F.lit(1), F.size(syms) - 1)) \
-            .otherwise(F.array().cast("array<int>"))
-        pairs = words.select(
-            "freq",
-            F.explode(F.transform(
-                pair_idx,
-                lambda i: F.concat(F.element_at(syms, i), F.lit(" "),
-                                   F.element_at(syms, i + 1))))
-            .alias("pair"))
-        best = (pairs.groupBy("pair")
-                .agg(F.sum("freq").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("pair").asc())
-                .limit(1).collect())
-        # the argmax job just materialized `words` — the corpus-grain
-        # base feed is no longer needed after round 0
-        if base_live:
-            base.unpersist(False)
-            base_live = False
-        if not best:
+        counts: dict[str, int] = {}
+        for freq, sym in words:
+            syms = sym.strip(" ").split(" ")
+            for a, b in zip(syms, syms[1:]):
+                pair = f"{a} {b}"
+                counts[pair] = counts.get(pair, 0) + freq
+        if not counts:
             break
-        pair, n = best[0].pair, int(best[0].n)
+        pair = min(counts, key=lambda p: (-counts[p], p.encode("utf-8")))
         left, right = pair.split(" ")
-        merges.append((rank, left, right, n))
-        pat = F.lit(f" {left} {right} ")
-        rep = F.lit(f" {left}{right} ")
-        col = F.col("sym")
-        for _ in range(passes):
-            col = F.replace(col, pat, rep)
-        nxt = words.select("freq", col.alias("sym")).persist()
-        # ONE job: scans every advanced row (filling nxt's cache from
-        # the cached `words`) while checking the replace fixpoint
-        residual = nxt.filter(
-            F.contains("sym", pat)).limit(1).count()
-        if residual:
-            nxt.unpersist(False)
-            words.unpersist(False)
-            raise ValueError(
-                f"bpe_merge_table: pattern {pair!r} survives {passes} "
-                "replace passes — raise `passes` so the round reaches "
-                "its replace fixpoint (the operator's defined merge "
-                "semantics) instead of leaving the merge half-applied")
-        # nxt's cache is full (the residual job scanned every row) —
-        # the previous state can go now
-        words.unpersist(False)
-        words = nxt
-    if base_live:
-        base.unpersist(False)
-    words.unpersist(False)
+        merges.append((rank, left, right, counts[pair]))
+        pat, rep = f" {left} {right} ", f" {left}{right} "
+        advanced = []
+        for freq, sym in words:
+            for _ in range(passes):
+                sym = sym.replace(pat, rep)
+            if pat in sym:
+                raise ValueError(
+                    f"bpe_merge_table: pattern {pair!r} survives {passes} "
+                    "replace passes — raise `passes` so the round reaches "
+                    "its replace fixpoint (the operator's defined merge "
+                    "semantics) instead of leaving the merge half-applied")
+            advanced.append((freq, sym))
+        words = advanced
     return merges
 
 

@@ -19,42 +19,11 @@ discipline; on a cluster use ``checkpoint`` to reliable storage).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from gasket_spark.utils import persisted
-
-
-def _loop_partitions(df: DataFrame) -> int:
-    """Scale-adaptive partition count for a fixpoint loop's invariant
-    tables (guide §2: derive partitioning from input size, never a
-    constant): Catalyst's size estimate of the edge input (file-size
-    based at the scan — costs no job) over a per-partition byte
-    target, clamped to [1, 4 × defaultParallelism]. The old implicit
-    constant (spark.sql.shuffle.partitions) over-fans small graphs —
-    every one of an 8-round loop's co-partitioned SHJ stages paid
-    32 tasks of scheduler overhead for KB-sized partitions that AQE
-    cannot coalesce (the cached tables' partitioning is frozen, no
-    exchange to re-plan) — and under-fans 100 TB ones. Partition
-    count cannot change any result here: both loop fixpoints are
-    integer-exact and partition-independent (tests/test_graph.py
-    pins partition invariance).
-
-    The default target is 1 MB of ESTIMATE bytes per partition:
-    Catalyst's scan estimate is compressed columnar file bytes,
-    roughly 8-16x smaller than the in-memory row data the loop
-    actually moves, so 1 MB of estimate is a healthy 8-16 MB task —
-    measured at sf0.1 (4.5 MB estimate -> 5 partitions) the 8-round
-    pagerank loop dropped 7.0 -> 5.2 s noop median vs the 32-constant,
-    while a 32 MB target (1 partition) serialized the loop to 8.0 s."""
-    target = int(os.environ.get("SPARK_GRAFT_LOOP_PARTITION_BYTES",
-                                str(1024 * 1024)))
-    est = int(df._jdf.queryExecution().optimizedPlan()
-              .stats().sizeInBytes())
-    cap = df.sparkSession.sparkContext.defaultParallelism * 4
-    return max(1, min(-(-est // target), cap))
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -68,7 +37,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     # duplicate edges (they only pad the join output), so the
     # symmetrize pass stays shuffle-free — one fewer exchange +
     # materialization before the loop. (A repartition("u") +
-    # shuffle-hash loop like pagerank()'s was A/B-measured 2.7×
+    # co-partitioned shuffle-hash loop was A/B-measured 2.7×
     # SLOWER here: the near-dup pair graph is tiny, so the per-round
     # exchange it would save costs less than the setup shuffle —
     # the loop-invariant-partitioning trick only pays on edge tables
@@ -140,95 +109,83 @@ def dedup_by_components(df: DataFrame, pairs: DataFrame,
         | (F.col(id_col) == F.col("component_id"))).drop("component_id")
 
 
+# Size contract of pagerank's single-task kernel: every distinct edge
+# of the graph is held by one Python worker, as two int64 code arrays
+# plus the pandas frame it arrives in.
+PAGERANK_MAX_EDGES = 20_000_000
+
+
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              damping: float = 0.85, max_iter: int = 20) -> DataFrame:
     """PageRank in FIXED-POINT arithmetic: ranks are longs in
-    micro-units (1e12 = mass 1.0), contributions use integer floor
-    division, and every per-iteration sum is an integer sum — so the
-    fixpoint is bit-identical under any partitioning (a double-sum
-    PageRank drifts with association order, which would make results
-    flap between runs and cluster layouts). The tiny mass lost to
-    floor division decays the total by < |V| ulp per round —
+    micro-units (1e12 = mass 1.0), contributions truncate an IEEE
+    double division to a long, and every per-round sum is an integer
+    sum — so the result is bit-identical under any partitioning (a
+    double-sum PageRank drifts with association order). The tiny
+    mass lost to truncation decays the total by < |V| ulp per round —
     deterministic, and irrelevant to ranking.
 
-    Shape per iteration: one join (ranks → out-edges) + one groupBy
-    (contributions by target) + the dangling-mass scalar — two
-    shuffles over edge-sized data, lineage truncated per round
-    (``localCheckpoint``), edges cached for the loop's lifetime only
-    (scope-bound). The dangling-mass scalar needs NO join: the rank
-    table carries each vertex's out-degree (joined once, before the
-    loop), so the per-round scalar is a plain agg over the
-    just-materialized checkpoint. Returns (v, rank) with rank scaled
-    back to doubles summing ≈ 1."""
+    Shape: ONE Spark pass plus one in-memory loop. The distributed
+    ``dropDuplicates`` of (u, w) is the only data-sized step; the
+    distinct edges then go, as one group on a constant column, to a
+    single ``applyInPandas`` kernel that runs all ``max_iter`` rounds
+    in numpy. Per round, with ``t`` the total rank, ``l`` the rank
+    held by vertices with out-edges and ``n`` the vertex count::
+
+        c       = trunc(double(r[u]) / double(deg[u]))   per edge
+        in_mass = int64 sum of c per w
+        base    = (t - t*85 div 100 + (t - l)*85 div 100) div n
+        r'      = trunc(double(base) + double(in_mass*85) / 100)
+
+    which is the arithmetic of the unrolled SQL oracle
+    (queries/relational.py:_pagerank_oracle). The returned DataFrame
+    is a lazy plan: building it fires no job and persists nothing.
+    A graph with more than ``PAGERANK_MAX_EDGES`` distinct edges fails
+    the kernel loudly instead of exhausting the worker. Edges with a
+    NULL endpoint are dropped; an empty edge set gives an empty
+    result. Returns (v, rank) with rank scaled back to doubles summing
+    ≈ 1."""
     SCALE = 1_000_000_000_000
-    # Loop-invariant tables are pre-partitioned ON THEIR JOIN KEYS and
-    # persisted: a cached DataFrame keeps its hash partitioning, so
-    # every iteration's join shuffles only the vertex-sized rank table
-    # — the edge table (the big side at 100 TB) never moves again.
-    # repartition("u") FIRST, dedup second: hash(u) co-locates every
-    # copy of an (u, w) edge, and Spark recognizes that
-    # HashPartitioning(u) satisfies the dedup's ClusteredDistribution
-    # on (u, w) — so the dedup needs NO second exchange (one setup
-    # shuffle where distinct().repartition("u") paid two).
-    n_parts = _loop_partitions(edges)
+    d_num, d_den = int(damping * 100), 100
+    # read here, on the driver: the kernel runs in a worker process
+    # that imports its own copy of this module
+    max_edges = PAGERANK_MAX_EDGES
     out = (edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
-           .repartition(n_parts, "u").dropDuplicates())
-    deg = out.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # verts carries the out-degree (NULL = dangling) for the loop's
-    # lifetime, so every rank table inherits it for free.
-    verts = (out.select(F.col("u").alias("v"))
-             .unionByName(out.select(F.col("w").alias("v")))
-             .distinct()
-             .join(deg.select(F.col("u").alias("v"), "deg"), "v", "left")
-             .repartition(n_parts, "v"))
-    with persisted(out, verts):
-        n = verts.count()
-        d_num, d_den = int(damping * 100), 100
-        ranks = verts.withColumn(
-            "r", F.lit(SCALE // n).cast("long")).localCheckpoint()
+           .dropna().dropDuplicates())
+    v_type = out.schema["u"].dataType
+
+    def _rounds(pdf):
+        import numpy as np
+        import pandas as pd
+
+        m = len(pdf)
+        if m > max_edges:
+            raise ValueError(
+                f"pagerank: {m} distinct edges exceed PAGERANK_MAX_EDGES"
+                f"={max_edges}, the size one in-memory kernel holds")
+        codes, verts = pd.factorize(pd.concat([pdf["u"], pdf["w"]],
+                                              ignore_index=True))
+        u, w = codes[:m], codes[m:]
+        n = len(verts)
+        deg = np.bincount(u, minlength=n)
+        linked = deg > 0
+        deg_u = deg[u].astype(np.float64)
+        r = np.full(n, SCALE // n, dtype=np.int64)
         for _ in range(max_iter):
-            # SHUFFLE_HASH hint on the vertex-sized side: both joins
-            # are already co-partitioned (no exchange), but the SMJ
-            # default re-SORTS the cached edge partitions every round
-            # — a per-round O(E log E) the hash build avoids. Build
-            # side is one rank-table partition (O(V/P), near-uniform
-            # hash keys), so the build is bounded at any scale;
-            # measured ~0.3 s/round at sf0.1. Results are unchanged
-            # by construction (join strategy can't affect the
-            # fixed-point integer arithmetic).
-            contrib = (
-                out.join(ranks.select(F.col("v").alias("u"), "deg", "r")
-                         .hint("shuffle_hash"), "u")
-                .select("w", (F.col("r") / F.col("deg"))
-                        .cast("long").alias("c"))
-                .groupBy("w").agg(F.sum("c").alias("in_mass"))
-            )
-            # dangling-mass scalar as a BROADCAST 1-row aggregate
-            # inside the same plan — no driver collect, so each
-            # iteration is ONE job (the checkpoint) instead of two.
-            # SQL `div` = Python `//` on the non-negative longs here,
-            # keeping the fixed point bit-identical to the unrolled
-            # oracle.
-            base_df = (
-                ranks.agg(
-                    F.sum("r").alias("_t"),
-                    F.sum(F.when(F.col("deg").isNotNull(), F.col("r"))
-                          .otherwise(F.lit(0))).alias("_l"))
-                .select(F.expr(
-                    f"(_t - _t * {d_num} div {d_den}"
-                    f" + (_t - _l) * {d_num} div {d_den}) div {n}")
-                    .alias("_base"))
-            )
-            ranks = (
-                verts.join(contrib.withColumnRenamed("w", "v")
-                           .hint("shuffle_hash"), "v", "left")
-                .crossJoin(F.broadcast(base_df))
-                .select("v", "deg",
-                        (F.col("_base") + F.coalesce("in_mass", F.lit(0))
-                         * d_num / d_den)
-                        .cast("long").alias("r"))
-                .localCheckpoint()
-            )
+            c = (r[u].astype(np.float64) / deg_u).astype(np.int64)
+            in_mass = np.zeros(n, dtype=np.int64)
+            np.add.at(in_mass, w, c)
+            t, lk = int(r.sum()), int(r[linked].sum())
+            base = (t - t * d_num // d_den
+                    + (t - lk) * d_num // d_den) // n
+            r = (np.float64(base)
+                 + (in_mass * d_num).astype(np.float64) / d_den
+                 ).astype(np.int64)
+        return pd.DataFrame({"v": verts, "r": r})
+
+    ranks = (out.withColumn("_g", F.lit(0)).groupBy("_g")
+             .applyInPandas(_rounds, StructType([
+                 StructField("v", v_type), StructField("r", LongType())])))
     return ranks.select(
         "v", (F.col("r").cast("double") / F.lit(float(SCALE)))
         .alias("rank"))

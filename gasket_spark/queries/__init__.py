@@ -596,9 +596,8 @@ def free_session_caches(spark: SparkSession,
     trades recompute for memory — the knob a session running hundreds
     of distinct queries needs (the r13 catch: a full-registry sf0.1
     sweep OOMed the JVM at query ~209 purely from ACCUMULATED cache
-    blocks; each query re-verified green in a fresh session).
-    Driver-only caches (BPE merge lists) are cleared too. Returns the
-    number of cache entries released.
+    blocks; each query re-verified green in a fresh session). Returns
+    the number of cache entries released.
 
     ``sweep_orphans=True`` additionally unpersists EVERY remaining
     persistent RDD in the session — the orphaned per-iteration
@@ -626,8 +625,6 @@ def free_session_caches(spark: SparkSession,
                 frame.unpersist(False)
         del llm._PLAN_PERSIST_CACHE[k]
         n += 1
-    n += len(llm._BPE_MERGE_CACHE)
-    llm._BPE_MERGE_CACHE.clear()
     if not sweep_orphans:
         return n
     # With every tracked cache cleared, a persistent RDD still in the

@@ -3714,33 +3714,12 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _plan_persist_cached(spark, sf_dir, "edit", _build)
 
 
-# the learned merge table is a bounded driver artifact (n_merges
-# rows) shared by q_bpe_train and q_bpe_tokens — cached per
-# (session, fixture, source stamp) so the 8-round training loop runs
-# once, not once per consumer; entries are plain Python lists (no
-# Spark resources to free on eviction).
-_BPE_MERGE_CACHE: dict[tuple[str, str, str], list[tuple]] = {}
-
-
-def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    import os as _os
-
-    from gasket_spark.io import source_stamp
+def _bpe_merges(docs: DataFrame) -> list[tuple]:
+    """The merge table q_bpe_train ships and q_bpe_tokens replays,
+    learned with the settings their oracles unroll."""
     from gasket_spark.operators.bpe import bpe_merge_table
 
-    app = spark.sparkContext.applicationId
-    key = (app, _os.path.normpath(sf_dir),
-           source_stamp(_os.path.join(sf_dir, "documents.parquet")))
-    hit = _BPE_MERGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _BPE_MERGE_CACHE
-              if k[0] != app or (k[1] == key[1] and k[2] != key[2])]:
-        del _BPE_MERGE_CACHE[k]
-    docs = read_table(spark, sf_dir, "documents")
-    merges = bpe_merge_table(docs, n_merges=8, passes=4)
-    _BPE_MERGE_CACHE[key] = merges
-    return merges
+    return bpe_merge_table(docs, n_merges=8, passes=4)
 
 
 from gasket_spark.operators.bpe import (bpe_encode,  # noqa: E402
@@ -3753,13 +3732,13 @@ from gasket_spark.operators.bpe import (bpe_encode,  # noqa: E402
     oracle=bpe_train_oracle_sql(8, passes=4, table="documents"),
 )
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING over the corpus — 8 merges
-    learned at DISTINCT-WORD grain (the corpus is scanned once into
-    (word, freq); every round after is one explode + two-phase
-    aggregate over the vocabulary, orders of magnitude smaller than
-    the corpus — the property that makes tokenizer training
-    100 TB-viable). Each round's merge applies as `passes`=4 chained
-    JVM replaces on the space-padded symbol encoding and ASSERTS the
+    """BPE tokenizer TRAINING over the corpus — 8 merges learned at
+    DISTINCT-WORD grain. One Spark aggregation counts the corpus into
+    (freq, padded symbols) and collects it; all 8 rounds then run on
+    the driver over that vocabulary-sized table (operators/bpe.py:
+    bpe_merge_table), so the build costs the same job or two for any
+    merge count. Each round's merge applies as `passes`=4 chained
+    replaces on the space-padded symbol encoding and ASSERTS the
     replace fixpoint was reached (loud, never half-applied); the
     winning pair breaks count ties on the pair string. The oracle is
     the ENTIRE training loop unrolled into per-round SQL CTEs
@@ -3768,14 +3747,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin runs), so the hash check certifies every round's statistics
     and every merge decision, not just the final table. Output: the
     merge table itself (merge_rank, left_sym, right_sym, pair_count)
-    — the tokenizer artifact a training run ships
-    (operators/bpe.py:bpe_merge_table). Driver-side loop note: 8
-    bounded Spark rounds (~3 s warm at sf0.1); corpora needing
-    hundreds of merges would batch pair-counting rounds first (r11
-    verdict watch item)."""
-    from gasket_spark.operators.bpe import bpe_merges_df  # noqa: F401
-
-    merges = _bpe_merges(spark, sf_dir)
+    — the tokenizer artifact a training run ships."""
+    merges = _bpe_merges(read_table(spark, sf_dir, "documents"))
     return spark.createDataFrame(
         [(r, lf, rt, n) for (r, lf, rt, n) in merges],
         "merge_rank int, left_sym string, right_sym string, "
@@ -3802,7 +3775,7 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/bpe.py:bpe_encode_oracle_sql — the pinned twin's
     builder), so training AND encoding are certified end to end."""
     docs = read_table(spark, sf_dir, "documents")
-    merges = _bpe_merges(spark, sf_dir)
+    merges = _bpe_merges(docs)
     return (bpe_encode(docs, merges, passes=4)
             .select("doc_id",
                     F.array_join("tokens", " ").alias("tokens_str"),

@@ -1894,11 +1894,14 @@ def _pagerank_oracle(iters: int = 8) -> str:
 @query("q_pagerank", oracle=_pagerank_oracle(8))
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the part↔supplier co-purchase graph
-    (both directions of every lineitem part-supplier edge): the
-    iterative-fixpoint shape (operators/graph.py). Fixed-point integer
-    arithmetic makes the result bit-identical under any partitioning
-    (tested in tests/test_graph.py) — and therefore bit-replicable by
-    the oracle's unrolled-iteration SQL (_pagerank_oracle), upgrading
+    (both directions of every lineitem part-supplier edge), 8 rounds
+    (operators/graph.py:pagerank). One distributed dedup of the edges
+    feeds one single-task pandas kernel that runs every round in
+    memory, so the query is a lazy plan: building it fires no job and
+    its action persists nothing. Fixed-point integer arithmetic makes
+    the result bit-identical under any partitioning (tested in
+    tests/test_graph.py) — and therefore bit-replicable by the
+    oracle's unrolled-iteration SQL (_pagerank_oracle), upgrading
     this from rows-only to full hash verification; top-20 by
     (rank desc, vertex) is deterministic."""
     from gasket_spark.operators.graph import pagerank
@@ -1907,13 +1910,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NARROW vertex ids inside the loop (r13 optimization round,
     # guide §2.3): the 'p<k>'/'s<k>' vertex strings are an INJECTIVE
     # image of (2·partkey, 2·suppkey+1), so the whole fixpoint runs
-    # on 8-byte longs — every per-iteration shuffle (rank table to
-    # the edge partitioning + contribution aggregate) carries a long
-    # key instead of a 5-9 char string, and long hashing/compares are
-    # cheaper in the per-round SHJ builds. The fixed-point integer
-    # arithmetic is id-representation-independent (same graph
-    # topology, same degree table, same integer sums), so every
-    # vertex's rank is bit-identical; the final decode rebuilds the
+    # on 8-byte longs — the edge dedup shuffles and the kernel
+    # factorizes long keys instead of 5-9 char strings. The
+    # fixed-point integer arithmetic is id-representation-independent
+    # (same graph topology, same degree table, same integer sums), so
+    # every vertex's rank is bit-identical; the final decode rebuilds the
     # exact 'p'||partkey / 's'||suppkey strings the oracle derives,
     # BEFORE the (rank desc, v) top-20 order so tie-breaks compare
     # the same strings.

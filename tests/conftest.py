@@ -21,3 +21,19 @@ def spark():
     })
     yield spark
     spark.stop()
+
+
+def jobs_fired(spark, fn):
+    """Run ``fn()`` under a fresh job group; returns (its result, the
+    number of Spark jobs it fired)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-fired-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -2,9 +2,13 @@
 structural correctness (connected components are covered via the dedup
 suites and the recursive-CTE oracle)."""
 
+import random
+from collections import Counter
+
 import pytest
 
 from gasket_spark.operators.graph import pagerank
+from tests.conftest import jobs_fired
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +48,92 @@ class TestPageRank:
         ranks = {r.v: r.rank for r in pagerank(g, max_iter=25).collect()}
         assert 0.99 < sum(ranks.values()) <= 1.0 + 1e-9
         assert ranks["b"] > ranks["a"]
+
+
+def _model_pagerank(edges, max_iter, damping=0.85):
+    """Plain-Python statement of pagerank's integer recurrence over
+    the distinct (u, w) edges: {vertex: rank}."""
+    scale = 1_000_000_000_000
+    d_num, d_den = int(damping * 100), 100
+    out = set(edges)
+    verts = {x for e in out for x in e}
+    n = len(verts)
+    deg = Counter(u for u, _ in out)
+    r = dict.fromkeys(verts, scale // n)
+    for _ in range(max_iter):
+        in_mass = dict.fromkeys(verts, 0)
+        for u, w in out:
+            in_mass[w] += int(float(r[u]) / float(deg[u]))
+        t = sum(r.values())
+        linked = sum(r[v] for v in verts if deg[v])
+        base = (t - t * d_num // d_den
+                + (t - linked) * d_num // d_den) // n
+        r = {v: int(float(base) + float(in_mass[v] * d_num) / d_den)
+             for v in verts}
+    return {v: float(x) / float(scale) for v, x in r.items()}
+
+
+def _random_graph(seed, as_string):
+    """Seeded random digraph with repeated edges and dangling vertices
+    (targets that never appear as a source)."""
+    rnd = random.Random(seed)
+    nv = rnd.randint(5, 80)
+    edges = [(rnd.randrange(nv), rnd.randrange(nv))
+             for _ in range(rnd.randint(nv, 4 * nv))]
+    edges += edges[: len(edges) // 3]                  # duplicates
+    edges += [(rnd.randrange(nv), nv + k) for k in range(3)]  # dangling
+    rnd.shuffle(edges)
+    if as_string:
+        return [(f"n{u}", f"n{w}") for u, w in edges]
+    return [(u * 1_000_000_007, w * 1_000_000_007) for u, w in edges]
+
+
+class TestPageRankKernel:
+    @pytest.mark.parametrize("as_string", [False, True],
+                             ids=["long", "string"])
+    @pytest.mark.parametrize("parts", [1, 7])
+    def test_matches_python_model(self, spark, as_string, parts):
+        """Bit-identical to the plain-Python recurrence on seeded
+        random graphs, whatever the id type and input partitioning."""
+        typ = "string" if as_string else "long"
+        for seed in range(3):
+            edges = _random_graph(seed, as_string)
+            df = spark.createDataFrame(edges, f"src {typ}, dst {typ}")
+            got = {r.v: r.rank for r in
+                   pagerank(df.repartition(parts), max_iter=8).collect()}
+            assert got == _model_pagerank(edges, 8), (seed, typ, parts)
+
+    def test_empty_edge_set_gives_empty_result(self, spark):
+        df = spark.createDataFrame([], "src string, dst string")
+        ranks, n_jobs = jobs_fired(spark, lambda: pagerank(df, max_iter=8))
+        assert n_jobs == 0
+        assert ranks.collect() == []
+
+    def test_q_pagerank_builds_lazily_and_persists_nothing(self, spark):
+        """The query's build fires no job beyond its table scan's
+        schema read, and its action leaves no persistent RDD behind."""
+        from gasket_spark.io import read_table
+        from gasket_spark.queries import QUERIES
+        from tests.conftest import SF_SMALL
+
+        _, scan_jobs = jobs_fired(
+            spark, lambda: read_table(spark, SF_SMALL, "lineitem"))
+        jsc = spark.sparkContext._jsc
+        before = set(dict(jsc.getPersistentRDDs()))
+        df, n_jobs = jobs_fired(
+            spark, lambda: QUERIES["q_pagerank"](spark, SF_SMALL))
+        assert n_jobs == scan_jobs
+        assert len(df.collect()) == 20
+        assert set(dict(jsc.getPersistentRDDs())) - before == set()
+
+    def test_edge_guard_raises_above_limit(self, spark, monkeypatch):
+        from gasket_spark.operators import graph
+
+        monkeypatch.setattr(graph, "PAGERANK_MAX_EDGES", 2)
+        df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                   "src long, dst long")
+        with pytest.raises(Exception, match="PAGERANK_MAX_EDGES"):
+            graph.pagerank(df, max_iter=2).collect()
 
 
 class TestSssp:

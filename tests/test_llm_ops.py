@@ -1511,6 +1511,31 @@ class TestBpeMergeTable:
         assert bpe_merge_table(runs, n_merges=1, passes=4) \
             == [(0, "a", "a", 39)]
 
+    def test_job_count_independent_of_merge_count(self, spark):
+        """One aggregation, then a driver-side loop: more merge rounds
+        fire no more Spark jobs."""
+        from gasket_spark.operators.bpe import bpe_merge_table
+        from tests.conftest import jobs_fired
+
+        df = spark.createDataFrame(
+            [("low lower lowest newest newer new",),
+             ("banana bandana banal wider wide widest",)], "text string")
+        one, jobs_one = jobs_fired(
+            spark, lambda: bpe_merge_table(df, n_merges=1))
+        eight, jobs_eight = jobs_fired(
+            spark, lambda: bpe_merge_table(df, n_merges=8))
+        assert len(one) == 1 and len(eight) == 8
+        assert eight[0] == one[0]
+        assert jobs_one == jobs_eight
+
+    def test_word_guard_raises_above_limit(self, spark, monkeypatch):
+        from gasket_spark.operators import bpe
+
+        monkeypatch.setattr(bpe, "BPE_MAX_WORDS", 2)
+        df = spark.createDataFrame([("alpha beta gamma",)], "text string")
+        with pytest.raises(ValueError, match="BPE_MAX_WORDS"):
+            bpe.bpe_merge_table(df, n_merges=1)
+
 
 class TestBpeEncode:
     def test_matches_reference_encode(self, spark):

@@ -16,12 +16,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # building these DataFrames EXECUTES work (streaming runs to
-# completion; iterative fixpoints collect per round) — their execution
-# properties are covered by selfcheck + tests instead
+# completion) — their execution properties are covered by selfcheck +
+# tests instead
 EXECUTES_ON_BUILD = {
     "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
     "q_stream_stateful_totals", "q_stream_stream_join", "q_stream_dedup",
-    "q_pagerank",
 }
 
 
@@ -73,8 +72,8 @@ def main() -> None:
         "1part = Exchange SinglePartition occurrences (global funnel —",
         "fine when the input is bounded, e.g. a post-LIMIT rank window",
         "or a 1-row aggregate; review any nonzero on unbounded input).",
-        "Streaming/iterative queries execute on build and are audited",
-        "by selfcheck + tests instead (see SURVEY §2B).",
+        "Streaming queries execute on build and are audited by",
+        "selfcheck + tests instead (see SURVEY §2B).",
         "",
         "| query | oracle | exch | joins | hashagg | topk | pushdown "
         "| codegen | 1part |",
