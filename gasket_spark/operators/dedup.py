@@ -187,70 +187,59 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.3,
                         max_doc_freq: int | None = 256) -> DataFrame:
-    """Exact n-gram Jaccard over an inverted index: explode distinct
-    shingles → self-join on the shingle (docs sharing ≥1 shingle) →
-    common-shingle counts → |A∩B| / (|A|+|B|−|A∩B|). The inverted-index
-    join is the scalable exact counterpart to MinHash's approximation.
+    """Exact n-gram Jaccard over posting lists: per-doc distinct
+    shingles → one posting list of doc ids per shingle → every id
+    pair within a list → common-shingle counts → |A∩B| / (|A|+|B|−|A∩B|).
+    The inverted index is the scalable exact counterpart to MinHash's
+    approximation. Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    ``max_doc_freq`` caps each shingle's document frequency BEFORE the
-    self-join — the join's fan-out is Σ df² over shingles, so one
+    ``max_doc_freq`` caps each shingle's document frequency before any
+    pair is formed: the pair fan-out is Σ df² over shingles, so one
     boilerplate shingle in a million docs is 5·10¹¹ pairs uncapped.
-    The default (256 ⇒ ≤ ~33k pairs/shingle) is the production
-    posture: shingles that common carry no near-dup signal (two docs
-    that are REAL near-dups still share many rare shingles). Pass
-    ``None`` only for small/curated corpora where exact Jaccard over
-    the full shingle space is the point."""
+    Jaccard is then taken over the capped shingle space on both sides,
+    and a doc that loses every shingle drops out. The default
+    (256 ⇒ ≤ ~33k pairs/shingle) is the production posture: shingles
+    that common carry no near-dup signal (two docs that are REAL
+    near-dups still share many rare shingles). Pass ``None`` only for
+    small/curated corpora where exact Jaccard over the full shingle
+    space is the point.
+
+    The result is one lazy, linear plan, the same shape capped or
+    not: one ``hashed_shingle_set`` Arrow pass, a group by shingle
+    whose list size is the df (the cap is a filter on it), and a
+    group by id pair over the pairs a ≤ b of each list. The diagonal
+    pair (a, a) counts a's kept shingles, i.e. its post-cap set size,
+    which two windows read back onto each off-diagonal pair. Building
+    it fires no job and persists nothing."""
     # 64-bit hashed shingle sets: set sizes and intersection counts —
     # hence Jaccard — are identical to string shingles unless two
     # distinct shingles collide in 64 bits (P ≈ |shingles|²/2⁶⁴; the
-    # per-round oracle, which computes STRING n-grams in SQL, verifies
-    # exactly this). The inverted index then shuffles 8-byte longs
-    # instead of ~20-byte strings.
-    if max_doc_freq is None:
-        # uncapped: sizes fall out of the shingle arrays for free
-        sh = _with_shingles(df, text_col, id_col, n, None,
-                            hashed=True).persist()
-        sizes = sh.select(id_col, F.size("sh").alias("n_sh"))
-        inv = sh.select(id_col, F.explode("sh").alias("s"))
-    else:
-        # capped: the Arrow shingle kernel's doc-grain array output is
-        # persisted and eagerly filled (ONE kernel pass — the old form
-        # left the exploded inv0 unpersisted, so the keep build and
-        # the index fill each re-ran the kernel; r14), then df-filter
-        # the exploded index in place — the keep-join and the
-        # self-join share the shuffle key ``s``, and the hot-shingle
-        # set never visits the driver (at 100 TB the keep table is
-        # shingle-vocabulary sized and stays distributed)
-        sh = df.select(
-            id_col, T.hashed_shingle_set(text_col, n).alias("sh")).persist()
-        sh.count()
-        inv0 = sh.select(id_col, F.explode("sh").alias("s"))
-        keep = (inv0.groupBy("s")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") <= max_doc_freq).select("s"))
-        inv = inv0.join(keep, "s").persist()
-        # serialize the capped index's cold cache fill (the self-join
-        # below consumes it from both sides concurrently)
-        inv.count()
-        # post-cap set sizes: identical to sizing the arrays after
-        # hot-shingle removal (shingles are distinct per doc); docs
-        # losing every shingle drop out — they can produce no pairs
-        sizes = inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (
-        a.join(b, [F.col("a.s") == F.col("b.s"),
-                   F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                 F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    # oracle, which computes STRING n-grams in SQL, verifies exactly
+    # this). The posting lists hold 8-byte longs instead of ~20-byte
+    # strings.
+    post = (
+        df.select(id_col, F.explode(T.hashed_shingle_set(text_col, n))
+                  .alias("s"))
+        .groupBy("s").agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    if max_doc_freq is not None:
+        post = post.filter(F.size("ids") <= max_doc_freq)
+    # pair each id with itself and every later id of its sorted list
+    counts = (
+        post.select("ids", F.posexplode("ids").alias("i", "id_a"))
+        .select("id_a", F.explode(F.slice("ids", F.col("i") + 1,
+                                          F.size("ids") - F.col("i")))
+                .alias("id_b"))
+        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    diag = F.when(F.col("id_a") == F.col("id_b"), F.col("n_common"))
+    n_a = F.max(diag).over(Window.partitionBy("id_a"))
+    n_b = F.max(diag).over(Window.partitionBy("id_b"))
+    jac = F.col("n_common") / (n_a + n_b - F.col("n_common"))
     return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        counts.select("id_a", "id_b", jac.alias("jaccard"))
+        .filter((F.col("id_a") < F.col("id_b"))
+                & (F.col("jaccard") >= threshold))
     )
 
 

@@ -1,20 +1,24 @@
-"""Connected components over near-duplicate pair edges.
+"""Graph operators as one Spark pass plus one in-memory kernel.
 
+Both operators here share a shape: the only data-sized step is a
+distributed ``dropDuplicates`` of the edge list; the distinct edges
+then go, as one group on a constant column, to a single
+``applyInPandas`` kernel that runs every round of the algorithm in
+numpy. At this engine's graph sizes (the near-dup pair graph, the
+co-purchase graph) a per-round Spark loop pays a job, its tasks and a
+checkpoint per round for very little data, so the in-memory loop is
+faster; a module-constant edge limit per operator is the size
+contract of the one worker that holds the graph.
+
+:func:`connected_components` resolves near-duplicate clusters.
 ``dedup_by_pairs`` uses a one-pass star approximation (drop every
 larger-id endpoint), which over-drops when duplicate clusters chain:
 a~b, b~c with a<b<c drops BOTH b and c even if a~c was never observed.
 Proper cluster resolution labels each doc with its component's min id
 and keeps exactly one survivor per component.
 
-:func:`connected_components` is iterative min-label propagation:
-every node starts labeled with its own id; each round, a node adopts
-the smallest label among itself and its neighbors; fixpoint = every
-node carries its component's minimum id. Convergence takes
-O(component diameter) rounds — near-dup clusters are shallow, so a
-handful. Each round is two shuffles (neighbor-min groupBy + label
-join); lineage is truncated per round with ``localCheckpoint`` so the
-plan doesn't grow with iterations (the standard iterative-Spark
-discipline; on a cluster use ``checkpoint`` to reliable storage).
+:func:`pagerank` is fixed-point PageRank with integer arithmetic, so
+its result is bit-identical under any partitioning.
 """
 
 from __future__ import annotations
@@ -23,78 +27,83 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from gasket_spark.utils import persisted
+
+def _one_kernel(df: DataFrame, kernel, schema: StructType) -> DataFrame:
+    """Run ``kernel`` once over all of ``df`` as one pandas frame, as a
+    lazy plan (``groupBy(F.lit(0))`` hits an internal error in
+    pyspark 4.1, so the constant is a column). An empty ``df`` has no
+    group, so the kernel does not run and the result is empty."""
+    return (df.withColumn("_g", F.lit(0)).groupBy("_g")
+            .applyInPandas(kernel, schema))
+
+
+# Size contract of connected_components' single-task kernel: every
+# distinct undirected edge is held by one Python worker, as two int64
+# code arrays plus the pandas frame it arrives in.
+COMPONENTS_MAX_EDGES = 20_000_000
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 50) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """Label every vertex of the undirected ``edges`` graph with its
-    component's minimum vertex id. Returns (v, component_id).
-    Deterministic: the fixpoint is unique regardless of partitioning
-    or iteration interleaving."""
-    # No .distinct() on sym: the per-round groupBy-min absorbs
-    # duplicate edges (they only pad the join output), so the
-    # symmetrize pass stays shuffle-free — one fewer exchange +
-    # materialization before the loop. (A repartition("u") +
-    # co-partitioned shuffle-hash loop was A/B-measured 2.7×
-    # SLOWER here: the near-dup pair graph is tiny, so the per-round
-    # exchange it would save costs less than the setup shuffle —
-    # the loop-invariant-partitioning trick only pays on edge tables
-    # big enough for the per-round sort/exchange to dominate.)
-    sc = edges.sparkSession.sparkContext
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        # union stacks both inputs' partitions (2× task count every
-        # round); a narrow coalesce restores the parallelism target
-        # without the exchange the old .distinct() paid for.
-        .coalesce(sc.defaultParallelism)
-    )
-    # sym is re-joined every round; labels are localCheckpoint'ed
-    # (materialized) each round, so sym's cache can be released the
-    # moment the loop exits — scope-bound, not LRU-bound.
-    from pyspark.sql import Observation
+    component's minimum vertex id. Returns (v, component_id), one row
+    per vertex that ends any edge; a self edge (a, a) makes ``a`` a
+    vertex.
 
-    # Convergence check without a join OR a second job: labels only
-    # ever DECREASE, so Σ label is strictly monotone until the
-    # fixpoint — and an Observation attached under the checkpoint
-    # computes it DURING the materialization job (verified: metrics
-    # fire on localCheckpoint), so each round is exactly one job.
-    def _checkpoint_with_sum(df):
-        obs = Observation()
-        out = df.observe(obs, F.sum("label").alias("s")) \
-            .localCheckpoint()
-        return out, obs.get["s"]
+    Shape: one distributed ``dropDuplicates`` of the (least, greatest)
+    endpoint pairs, then one ``applyInPandas`` kernel that runs
+    min-label propagation with pointer jumping to its fixpoint in
+    numpy. Vertices are coded in sorted order, so the minimum code of a
+    component is its minimum id. Each round takes, per edge, the
+    smaller label of its two ends, lowers both ends' labels to it,
+    then replaces each label by its label's label; labels only fall
+    and each stays a vertex of its own component, so the fixpoint, in
+    which both ends of every edge agree, gives every vertex its
+    component's minimum. Deterministic under any partitioning.
 
-    with persisted(sym):
-        # Round 1 needs NO join: the neighbor-min of the identity seed
-        # (label(v) = v) is min(v, min of v's neighbors), which reads
-        # straight off the edge list — neighbor candidates from
-        # sym(v ← u), self candidates from sym(u ← u). One shuffle
-        # replaces seed-distinct + join.
-        labels, label_sum = _checkpoint_with_sum(
-            sym.select("v", F.col("u").alias("label"))
-            .unionByName(sym.select(F.col("u").alias("v"),
-                                    F.col("u").alias("label")))
-            .groupBy("v").agg(F.min("label").alias("label"))
-        )
-        for _ in range(max_iter - 1):
-            # one hop of min-label propagation in TWO shuffles: push
-            # every neighbor's label to v (join on u), union v's own
-            # label row, take the min per v. (The previous three-
-            # shuffle form did groupBy then re-joined onto labels.)
-            labels, new_sum = _checkpoint_with_sum(
-                sym.join(labels.select(F.col("v").alias("u"), "label"), "u")
-                .select("v", "label")
-                .unionByName(labels)
-                .groupBy("v").agg(F.min("label").alias("label"))
-            )
-            if new_sum == label_sum:
+    The returned DataFrame is a lazy plan: building it fires no job
+    and persists nothing. Edges with a NULL endpoint are dropped; an
+    empty edge set gives an empty result. A graph with more than
+    ``COMPONENTS_MAX_EDGES`` distinct edges fails the kernel loudly
+    instead of exhausting the worker."""
+    # read here, on the driver: the kernel runs in a worker process
+    # that imports its own copy of this module
+    max_edges = COMPONENTS_MAX_EDGES
+    # dropna before least/greatest, which skip a NULL argument
+    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+           .dropna()
+           .select(F.least("a", "b").alias("u"),
+                   F.greatest("a", "b").alias("w"))
+           .dropDuplicates())
+    v_type = und.schema["u"].dataType
+
+    def _fixpoint(pdf):
+        import numpy as np
+        import pandas as pd
+
+        m = len(pdf)
+        if m > max_edges:
+            raise ValueError(
+                f"connected_components: {m} distinct edges exceed "
+                f"COMPONENTS_MAX_EDGES={max_edges}, the size one "
+                "in-memory kernel holds")
+        codes, verts = pd.factorize(
+            pd.concat([pdf["u"], pdf["w"]], ignore_index=True), sort=True)
+        u, w = codes[:m], codes[m:]
+        label = np.arange(len(verts))
+        while True:
+            low = np.minimum(label[u], label[w])
+            nxt = label.copy()
+            np.minimum.at(nxt, u, low)
+            np.minimum.at(nxt, w, low)
+            nxt = nxt[nxt]
+            if np.array_equal(nxt, label):
                 break
-            label_sum = new_sum
-    return labels.select("v", F.col("label").alias("component_id"))
+            label = nxt
+        return pd.DataFrame({"v": verts, "component_id": verts[label]})
+
+    return _one_kernel(und, _fixpoint, StructType([
+        StructField("v", v_type), StructField("component_id", v_type)]))
 
 
 def dedup_by_components(df: DataFrame, pairs: DataFrame,
@@ -183,9 +192,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                  ).astype(np.int64)
         return pd.DataFrame({"v": verts, "r": r})
 
-    ranks = (out.withColumn("_g", F.lit(0)).groupBy("_g")
-             .applyInPandas(_rounds, StructType([
-                 StructField("v", v_type), StructField("r", LongType())])))
+    ranks = _one_kernel(out, _rounds, StructType([
+        StructField("v", v_type), StructField("r", LongType())]))
     return ranks.select(
         "v", (F.col("r").cast("double") / F.lit(float(SCALE)))
         .alias("rank"))

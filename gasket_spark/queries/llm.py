@@ -237,14 +237,17 @@ def _plan_persist_cached(spark: SparkSession, sf_dir: str, tag: str,
 
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped exact n-gram Jaccard pair graph over the
-    near-dup corpus (threshold 0.5, max_doc_freq 8) — built once per
-    (session, sf_dir, documents-stamp) and shared by q_dedup_ngram
-    and q_dedup_components (the same discipline as the graph family's
-    `_EDGE_CACHE` in relational.py: two queries fan out of one
-    materialized build; applicationId in the key so a dead session's
-    checkpoint can't leak; the source stamp so a rewritten fixture
-    can't serve stale pairs; other-app/stale entries evicted on
-    miss)."""
+    near-dup corpus (threshold 0.5, max_doc_freq 8), shared by
+    q_dedup_ngram and q_dedup_components.
+
+    ``ngram_jaccard_pairs`` itself is a lazy plan; this wrapper
+    ``localCheckpoint``s it once per (session, sf_dir, documents
+    stamp) in ``_PAIR_CACHE``, so the second consumer and every warm
+    call read the materialized pairs instead of re-running the
+    shingle kernel and the posting-list shuffles. applicationId is in
+    the key so a dead session's checkpoint can't leak, and the source
+    stamp so a rewritten fixture can't serve stale pairs; other-app
+    and stale entries are evicted on a miss, their blocks freed."""
     import os as _os
 
     from gasket_spark.io import (
@@ -1419,8 +1422,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the cluster-correct resolution the one-pass star approximation
     can't give), built from the SAME df-capped pair graph as
     q_dedup_ngram (production posture — the uncapped inverted index is
-    quadratic in the hottest shingle at scale). Iterative min-label
-    propagation, verified EXACTLY against the oracle's recursive-CTE
+    quadratic in the hottest shingle at scale). One dropDuplicates of
+    the undirected edges, then min-label propagation to its fixpoint
+    in one in-memory kernel; with the pair graph cached the build
+    fires no job. Verified EXACTLY against the oracle's recursive-CTE
     transitive closure over the identically-capped pair set."""
     from gasket_spark.operators.graph import connected_components
 

@@ -2,26 +2,50 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
 
-@contextmanager
-def persisted(*dfs: DataFrame):
-    """Scope-bound caching: persist the given DataFrames for the
-    duration of the block, unpersist on exit — including on error.
-    For operators that MATERIALIZE internally (iterative algorithms,
-    multi-pass builds): at 100 TB a leaked cached table is executor
-    memory/disk held until LRU pressure; scoping makes the lifetime
-    explicit. (Operators that persist inputs reused by the *returned*
-    lazy plan can't scope — the caller's action happens later; those
-    rely on LRU by design.)
-    """
-    for df in dfs:
-        df.persist()
-    try:
-        yield dfs[0] if len(dfs) == 1 else dfs
-    finally:
-        for df in dfs:
-            df.unpersist()
+def plan_nodes(df: DataFrame) -> Counter:
+    """Count the physical node classes of ``df``'s executed plan,
+    keyed by class name without the ``Exec`` suffix
+    (``ShuffleExchange``, ``BroadcastExchange``, ``ArrowEvalPython``,
+    ``InMemoryTableScan``, ...).
+
+    The walk descends into adaptive plans and their query stages,
+    into subqueries, and into the plan of every cached relation a
+    scan reads, counting each cached plan once however many scans
+    share it. A reused exchange or subquery is counted as its
+    ``Reused*`` node, not again as what it reuses. Unlike substring
+    counts on explain text, a cached subplan that the explain output
+    repeats is not counted twice."""
+    jvm = df.sparkSession._jvm
+    counts: Counter = Counter()
+    seen_cached: set[int] = set()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        counts[name.removesuffix("Exec")] += 1
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif name.startswith("Reused"):
+            kids = []
+        else:
+            kids = seq(node.children()) + seq(node.subqueries())
+        if name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = jvm.System.identityHashCode(builder)
+            if key not in seen_cached:
+                seen_cached.add(key)
+                kids.append(builder.cachedPlan())
+        for kid in kids:
+            walk(kid)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts

@@ -1,13 +1,14 @@
 """Graph-operator tests: fixed-point PageRank determinism and
-structural correctness (connected components are covered via the dedup
-suites and the recursive-CTE oracle)."""
+structural correctness, and the connected-components kernel against a
+union-find model (components are also covered via the dedup suites
+and the recursive-CTE oracle)."""
 
 import random
 from collections import Counter
 
 import pytest
 
-from gasket_spark.operators.graph import pagerank
+from gasket_spark.operators.graph import connected_components, pagerank
 from tests.conftest import jobs_fired
 
 
@@ -134,6 +135,97 @@ class TestPageRankKernel:
                                    "src long, dst long")
         with pytest.raises(Exception, match="PAGERANK_MAX_EDGES"):
             graph.pagerank(df, max_iter=2).collect()
+
+
+def _model_components(edges):
+    """Union-find over the edges with no NULL endpoint:
+    {vertex: the minimum vertex of its component}."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _random_pair_graph(seed, as_string):
+    """Seeded undirected graph of small clusters, with duplicate,
+    reversed and self edges."""
+    rnd = random.Random(seed)
+    nv = rnd.randint(5, 80)
+    edges = [(rnd.randrange(nv), rnd.randrange(nv))
+             for _ in range(rnd.randint(1, nv))]
+    edges += edges[: len(edges) // 3]                       # duplicates
+    edges += [(w, u) for u, w in edges[: len(edges) // 4]]  # reversed
+    edges += [(u, u) for u in rnd.sample(range(nv), 3)]     # self
+    rnd.shuffle(edges)
+    if as_string:
+        return [(f"d{u}é", f"d{w}é") for u, w in edges]
+    return [(u * 1_000_000_007 - 10**10, w * 1_000_000_007 - 10**10)
+            for u, w in edges]
+
+
+class TestComponentsKernel:
+    @pytest.mark.parametrize("as_string", [False, True],
+                             ids=["long", "string"])
+    @pytest.mark.parametrize("parts", [1, 7])
+    def test_matches_union_find_model(self, spark, as_string, parts):
+        typ = "string" if as_string else "long"
+        for seed in range(3):
+            edges = _random_pair_graph(seed, as_string)
+            df = spark.createDataFrame(edges, f"id_a {typ}, id_b {typ}")
+            got = {r.v: r.component_id for r in
+                   connected_components(df.repartition(parts)).collect()}
+            assert got == _model_components(edges), (seed, typ, parts)
+
+    def test_empty_edge_set_gives_empty_result(self, spark):
+        df = spark.createDataFrame([], "id_a long, id_b long")
+        comp, n_jobs = jobs_fired(spark, lambda: connected_components(df))
+        assert n_jobs == 0
+        assert comp.collect() == []
+
+    def test_null_endpoints_are_dropped(self, spark):
+        df = spark.createDataFrame([(1, None), (None, 2), (None, None),
+                                    (4, 3)], "id_a long, id_b long")
+        got = {(r.v, r.component_id)
+               for r in connected_components(df).collect()}
+        assert got == {(3, 3), (4, 3)}
+
+    def test_edge_guard_raises_above_limit(self, spark, monkeypatch):
+        from gasket_spark.operators import graph
+
+        monkeypatch.setattr(graph, "COMPONENTS_MAX_EDGES", 2)
+        df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                   "id_a long, id_b long")
+        with pytest.raises(Exception, match="COMPONENTS_MAX_EDGES"):
+            graph.connected_components(df).collect()
+
+    def test_q_dedup_components_builds_lazily_on_warm_pairs(self, spark):
+        """With the shared pair graph already cached, the query's
+        build fires no job and its action leaves no persistent RDD
+        behind."""
+        from gasket_spark.queries import QUERIES
+        from tests.conftest import SF_SMALL
+
+        QUERIES["q_dedup_ngram"](spark, SF_SMALL)
+        jsc = spark.sparkContext._jsc
+        before = set(dict(jsc.getPersistentRDDs()))
+        df, n_jobs = jobs_fired(
+            spark, lambda: QUERIES["q_dedup_components"](spark, SF_SMALL))
+        assert n_jobs == 0
+        assert df.collect()
+        assert set(dict(jsc.getPersistentRDDs())) - before == set()
 
 
 class TestSssp:

@@ -2,6 +2,10 @@
 near-duplicates, ANN recall vs exact top-k, survivor resolution,
 multimodal plumbing shape."""
 
+import random
+from collections import Counter
+from itertools import combinations
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,7 +13,8 @@ from gasket_spark.io import read_table
 from gasket_spark.operators import dedup as D
 from gasket_spark.operators import multimodal as M
 from gasket_spark.operators import similarity as S
-from tests.conftest import SF_SMALL
+from gasket_spark.utils import plan_nodes
+from tests.conftest import SF_SMALL, jobs_fired
 
 
 @pytest.fixture(scope="module")
@@ -838,6 +843,94 @@ class TestHotShingleCap:
         assert D.ngram_jaccard_pairs(df, threshold=0.1).count() == 0
         assert D.ngram_jaccard_pairs(df, threshold=0.1,
                                      max_doc_freq=None).count() > 0
+
+
+def _model_ngram_pairs(rows, n, threshold, max_doc_freq):
+    """Plain-Python statement of capped n-gram Jaccard: token n-gram
+    sets per doc, shingles in more than ``max_doc_freq`` docs removed
+    from every set, then Jaccard over the capped sets of each id pair
+    sharing a shingle. {(id_a, id_b, jaccard)} with id_a < id_b."""
+    sets = {}
+    for doc_id, text in rows:
+        toks = [] if text is None else text.split(" ")
+        sets[doc_id] = {tuple(toks[i:i + n])
+                        for i in range(len(toks) - n + 1)}
+    df = Counter(s for sh in sets.values() for s in sh)
+    if max_doc_freq is not None:
+        sets = {d: {s for s in sh if df[s] <= max_doc_freq}
+                for d, sh in sets.items()}
+    out = set()
+    for a, b in combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        if inter:
+            jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+            if jac >= threshold:
+                out.add((a, b, jac))
+    return out
+
+
+def _random_corpus(seed):
+    """Seeded docs over a tiny vocabulary, so shingles repeat across
+    docs at many document frequencies; some texts are NULL, empty or
+    shorter than a shingle."""
+    rnd = random.Random(seed)
+    vocab = "a b c d e f".split()
+    ids = rnd.sample(range(-10**6, 10**6), rnd.randint(20, 50))
+    rows = []
+    for doc_id in ids:
+        k = rnd.randint(0, 10)
+        text = " ".join(rnd.choice(vocab[:rnd.randint(2, 6)])
+                        for _ in range(k))
+        rows.append((doc_id, None if rnd.random() < 0.1 else text))
+    return rows
+
+
+class TestNgramPairGraph:
+    @pytest.mark.parametrize("parts", [1, 7])
+    def test_matches_python_model(self, spark, parts):
+        """Equal, pair for pair and to the last bit of the Jaccard,
+        to the plain-Python capped model, with and without a cap and
+        whatever the input partitioning."""
+        for seed in range(3):
+            rows = _random_corpus(seed)
+            df = spark.createDataFrame(
+                rows, "doc_id long, text string").repartition(parts)
+            for cap in (None, 1, 3):
+                for t in (0.2, 0.5):
+                    got = {(r.id_a, r.id_b, r.jaccard) for r in
+                           D.ngram_jaccard_pairs(
+                               df, threshold=t,
+                               max_doc_freq=cap).collect()}
+                    assert got == _model_ngram_pairs(rows, 3, t, cap), \
+                        (seed, parts, cap, t)
+
+    def test_cap_keeps_df_equal_to_cap_and_drops_one_above(self, spark):
+        """With max_doc_freq=2, "a b c" (df 2) is kept and "x y z"
+        (df 3) is dropped from every set, so docs 1, 3 and 5 share
+        nothing; NULL and two-token texts have no shingle."""
+        rows = [(1, "a b c x y z"), (2, "a b c x y w"),
+                (3, "q r s x y z"), (4, "q r s k"), (5, "x y z"),
+                (6, None), (7, "a b")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {(r.id_a, r.id_b, r.jaccard) for r in
+               D.ngram_jaccard_pairs(df, threshold=0.2,
+                                     max_doc_freq=2).collect()}
+        assert got == {(1, 2, 0.75), (3, 4, 0.25)}
+        assert got == _model_ngram_pairs(rows, 3, 0.2, 2)
+
+    def test_builds_lazily_with_one_kernel_and_no_cache(self, spark):
+        """Building fires no job; the plan evaluates the shingle
+        kernel once and reads no cached relation."""
+        df = spark.createDataFrame(_random_corpus(0),
+                                   "doc_id long, text string")
+        for cap in (None, 8):
+            pairs, n_jobs = jobs_fired(
+                spark, lambda: D.ngram_jaccard_pairs(
+                    df, threshold=0.5, max_doc_freq=cap))
+            assert n_jobs == 0
+            nodes = plan_nodes(pairs)
+            assert nodes["ArrowEvalPython"] == 1
+            assert nodes["InMemoryTableScan"] == 0
 
 
 class TestContainment:

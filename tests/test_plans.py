@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from gasket_spark.io import read_table, write_bucketed
 from gasket_spark.queries import QUERIES
+from gasket_spark.utils import plan_nodes
 from tests.conftest import SF_SMALL
 
 
@@ -141,9 +142,10 @@ class TestPlanContracts:
         (each moves <= k-hash sketch rows, a few KB); a count above the
         pinned ceiling means a sketch stage started moving corpus
         rows."""
-        plan = _plan(QUERIES["q_theta_setops"](spark, SF_SMALL))
-        assert plan.count("Exchange") <= 48   # 12 logical, ~4 mentions each
-        assert "BroadcastHashJoin" in plan
+        df = QUERIES["q_theta_setops"](spark, SF_SMALL)
+        nodes = plan_nodes(df)
+        assert nodes["ShuffleExchange"] + nodes["BroadcastExchange"] <= 12
+        assert "BroadcastHashJoin" in _plan(df)
 
 
 class TestBucketedJoin:

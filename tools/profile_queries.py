@@ -1,16 +1,15 @@
-"""Round-13 optimization profiler: per-query isolated timing via the
-noop sink (guide §1.4 — computes every column, no driver collect cost)
-plus `.explain("formatted")` capture into plans/r13/.
+"""Per-query profiler: isolated timing via the noop sink (computes
+every column, no driver collect cost) plus an `.explain("formatted")`
+capture of each query's plan.
 
 Usage:
-    python tools/profile_r13.py [sf_dir] q_a q_b ...   # subset
-    python tools/profile_r13.py [sf_dir] --all          # bench headline set
+    python tools/profile_queries.py PLAN_DIR [sf_dir] q_a q_b ...   # subset
+    python tools/profile_queries.py PLAN_DIR [sf_dir] --all          # bench headline set
 
-Writes plans/r13/<query>_<tag>.txt (tag via --tag, default "before")
-and prints one line per query: noop-sink seconds (median of N runs,
-default 3 — SPARK_GRAFT_PROFILE_RUNS) next to the bench-action
-seconds, so the two methodologies stay comparable. Jobs are labelled
-(guide §1.5) for UI debugging.
+Writes PLAN_DIR/<query>_<tag>.txt (tag via --tag, default "before";
+PLAN_DIR is created if missing) and prints one line per query: the
+noop-sink median of N runs (default 3, SPARK_GRAFT_PROFILE_RUNS) and
+every run's seconds. Jobs carry a description per query and run.
 """
 
 from __future__ import annotations
@@ -23,12 +22,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     tag = "before"
     if "--tag" in args:
         i = args.index("--tag")
         tag = args[i + 1]
         del args[i:i + 2]
+    if not args:
+        sys.exit(__doc__)
+    outdir = args.pop(0)
     sf_dir = "/root/testdata/sf0.1"
     if args and os.path.isdir(args[0]):
         sf_dir = args.pop(0)
@@ -36,7 +38,7 @@ def main() -> None:
     from gasket_spark.queries import QUERIES
     from gasket_spark.session import get_spark
 
-    spark = get_spark("gasket-profile-r13")
+    spark = get_spark("gasket-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     if args == ["--all"]:
@@ -52,8 +54,6 @@ def main() -> None:
     for t in TABLES:
         read_table(spark, sf_dir, t).count()
 
-    outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(outdir, exist_ok=True)
 
     print(f"# sf_dir={sf_dir} runs={runs} tag={tag} "
@@ -65,7 +65,7 @@ def main() -> None:
         sc = spark.sparkContext
         ts = []
         for i in range(runs):
-            sc.setJobDescription(f"r13-profile {name} run{i}")
+            sc.setJobDescription(f"profile {name} run{i}")
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
