@@ -298,7 +298,7 @@ def main() -> None:
     # warmup: trigger codegen/Python-worker startup once and touch every
     # input table so timings measure query compute, not first-read I/O
     QUERIES["q_agg_hash"](spark, sf_dir).collect()
-    from gasket_spark.io import TABLES, read_table
+    from gasket_spark.io import SESSION_CACHE, TABLES, read_table
     for t in TABLES:
         read_table(spark, sf_dir, t).count()
     # materialize the stamp-cached CDC table (a 4-micro-batch streaming
@@ -311,33 +311,14 @@ def main() -> None:
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     load_start = os.getloadavg()
     calib_start = _host_calibration(spark)
-    # Queries that consult ANY process-level stamp cache: run ONCE and
-    # record run 1 — the same cold semantics every pre-r13 single-run
-    # artifact carried. The r13 round exempted only the two
-    # result-checkpointing caches; the r13 verdict's audit showed the
-    # median-of-3 rode EVERY cross-run cache (a memoised result is a
-    # ~50 ms lookup, a persisted intermediate a warm fraction of the
-    # query), so runs 2-3 measured cache hits, not query cost. r14
-    # extends the set to every cache-consulting headline query:
-    # results (_PAIR_CACHE pairs for ngram/components,
-    # _PREFIX_PAIR_CACHE), plan-persist intermediates
-    # (_plan_persist_cached: theta, containment, winnow, edit,
-    # semantic, semantic_incr), and the graph _EDGE_CACHE consumers
-    # (triangles, sssp). Within one bench invocation later queries
-    # still see earlier queries' caches (components after ngram) —
-    # exactly the pre-r13 single-run ordering semantics.
-    cold_only = {
-        "q_dedup_ngram", "q_dedup_prefix", "q_dedup_components",
-        "q_theta_setops", "q_dedup_containment", "q_fingerprint_winnow",
-        "q_dedup_edit", "q_dedup_semantic", "q_dedup_semantic_incr",
-        "q_graph_triangles", "q_graph_sssp",
-    }
+    cold_only: list[str] = []
     timings: dict[str, float] = {}
     for name, action in HEADLINE.items():
         if name not in QUERIES:
             continue
         ts = []
-        for _ in range(1 if name in cold_only else runs):
+        for _ in range(runs):
+            held = set(SESSION_CACHE)
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
             if action == "collect":
@@ -345,6 +326,11 @@ def main() -> None:
             else:
                 df.count()
             ts.append(time.time() - t0)
+            # a first run that filled the session cache measured the
+            # cold build; a repeat would only time the cache hit
+            if len(ts) == 1 and SESSION_CACHE.keys() - held:
+                cold_only.append(name)
+                break
         # median (lower median for even run counts): robust to one
         # slow-tenant spike, unlike mean; still honest about steady
         # state, unlike min
@@ -363,7 +349,7 @@ def main() -> None:
         "sf": sf_val,
         "runs_per_query": runs,
         "agg": "median",
-        "cold_only": sorted(cold_only & set(timings)),
+        "cold_only": sorted(cold_only),
         "load_avg_start": [round(x, 2) for x in load_start],
         "load_avg_end": [round(x, 2) for x in os.getloadavg()],
         "host_calib_start": calib_start,

@@ -290,9 +290,9 @@ def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
 
 def free_checkpoint(spark: SparkSession, ids) -> None:
     """Best-effort release of checkpoint/persist blocks recorded by
-    :func:`checkpoint_tracked` — called when a stamp-cache evicts an
-    entry, so a long-lived session does not accumulate dead blocks
-    until JVM GC happens to notice them. Ids no longer in the
+    :func:`checkpoint_tracked` — called when :func:`session_cached`
+    evicts an entry, so a long-lived session does not accumulate dead
+    blocks until JVM GC happens to notice them. Ids no longer in the
     persistent map (already collected, or a restarted context) are
     skipped silently."""
     try:
@@ -310,11 +310,66 @@ def free_checkpoint(spark: SparkSession, ids) -> None:
 
 def source_stamp(src: str) -> str:
     """The (size, mtime_ns) identity token of a source file — the same
-    freshness signal :func:`stamp_cached` uses, for in-memory caches
-    (e.g. the graph edge cache) that must drop entries when the
-    underlying parquet is rewritten."""
+    freshness signal :func:`stamp_cached` uses, for the in-memory
+    :func:`session_cached` entries that must drop when the underlying
+    parquet is rewritten."""
     st = os.stat(src)
     return f"{st.st_size}:{st.st_mtime_ns}"
+
+
+# (tag, applicationId, normpath(sf_dir), source stamp of the table the
+# query reads) -> (result, release handles). Read it to see what the
+# process holds; change it only through the two functions below.
+SESSION_CACHE: dict[tuple[str, str, str, str],
+                    tuple[DataFrame, tuple]] = {}
+
+
+def _release(spark: SparkSession, handles: tuple) -> None:
+    """Unpersist the persisted frames among ``handles`` and free the
+    checkpoint RDD ids (ints) among them."""
+    for h in handles:
+        if not isinstance(h, int):
+            h.unpersist(False)
+    free_checkpoint(spark, [h for h in handles if isinstance(h, int)])
+
+
+def session_cached(spark: SparkSession, tag: str, sf_dir: str,
+                   table: str, build) -> DataFrame:
+    """The query layer's one cache for Spark-resident intermediates:
+    return the result ``build()`` made for ``tag`` in this session
+    over ``sf_dir``, while ``<sf_dir>/<table>.parquet`` — the table
+    the cached plan reads — keeps its stamp; else build and keep it.
+
+    ``build()`` returns ``(result, handles)``: the persisted frames
+    and/or the :func:`checkpoint_tracked` RDD ids the result holds.
+    On a miss every other-session entry is dropped (its handles died
+    with its session), and every same-(tag, sf_dir) entry with a
+    stale stamp is dropped and released, so a rewritten table is
+    never served stale and its blocks do not pile up."""
+    app = spark.sparkContext.applicationId
+    key = (tag, app, os.path.normpath(sf_dir),
+           source_stamp(os.path.join(sf_dir, f"{table}.parquet")))
+    hit = SESSION_CACHE.get(key)
+    if hit is not None:
+        return hit[0]
+    for k in [k for k in SESSION_CACHE
+              if k[1] != app or k[:3] == key[:3]]:
+        if k[1] == app:
+            _release(spark, SESSION_CACHE[k][1])
+        del SESSION_CACHE[k]
+    result, handles = build()
+    SESSION_CACHE[key] = (result, tuple(handles))
+    return result
+
+
+def release_session_cache(spark: SparkSession) -> int:
+    """Release every :func:`session_cached` entry of this session and
+    return how many there were; each rebuilds on its next call."""
+    app = spark.sparkContext.applicationId
+    mine = [k for k in SESSION_CACHE if k[1] == app]
+    for k in mine:
+        _release(spark, SESSION_CACHE.pop(k)[1])
+    return len(mine)
 
 
 def drop_managed_table(spark: SparkSession, table: str) -> None:

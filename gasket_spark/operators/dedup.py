@@ -278,9 +278,9 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     long as the returned lazy plan — callers that invoke repeatedly
     in a long-lived session should use
     :func:`containment_pairs_tracked` and unpersist on eviction (the
-    r11 ADVICE finding; q_dedup_containment holds them in a stamp
-    cache). This convenience form discards the handles, accepting
-    session-lifetime residency."""
+    r11 ADVICE finding; q_dedup_containment hands them to
+    ``io.session_cached``). This convenience form discards the
+    handles, accepting session-lifetime residency."""
     out, _cached = containment_pairs_tracked(
         df, text_col=text_col, id_col=id_col, n=n,
         threshold_num=threshold_num, threshold_den=threshold_den,
@@ -297,8 +297,8 @@ def containment_pairs_tracked(
     frames, so a caller that caches the (lazy) result can unpersist
     them on eviction instead of accumulating cached blocks across
     invocations (plain ``persist``, so ``DataFrame.unpersist`` works
-    — unlike the localCheckpoint caches that need
-    ``io.free_checkpoint``)."""
+    — unlike checkpoint RDD ids, which need ``io.free_checkpoint``;
+    ``io.session_cached`` releases either kind of handle)."""
     # persisted at DOC grain (r14): the Arrow shingle kernel's output
     # is the per-doc distinct-hash ARRAY, and everything downstream
     # derives from it — sizes as F.size (no aggregation pass at all:
@@ -648,7 +648,8 @@ def prefix_filter_pairs_tracked(
 ) -> tuple[DataFrame, frozenset[int]]:
     """:func:`prefix_filter_pairs` plus the persistent-RDD ids of the
     eager checkpoint, for callers that cache the result and must be
-    able to release it on eviction (``io.free_checkpoint``)."""
+    able to release it on eviction (``io.session_cached`` frees the
+    ids through ``io.free_checkpoint``)."""
     sh = df.select(id_col,
                    T.hashed_shingle_set(text_col, n).alias("sh")).persist()
     # eager fill (r14): the checkpoint action below reads this cache
@@ -783,7 +784,8 @@ def edit_distance_pairs(df: DataFrame, text_col: str = "text",
     """Convenience form of :func:`edit_distance_pairs_tracked` that
     discards the persisted-intermediate handle (accepting
     session-lifetime residency of the gram table — the r11 ADVICE
-    finding; q_dedup_edit uses the tracked form + stamp cache).
+    finding; q_dedup_edit hands the tracked form's handles to
+    ``io.session_cached``).
     Contract and docs: see the tracked twin below."""
     out, _cached = edit_distance_pairs_tracked(
         df, text_col=text_col, id_col=id_col, d=d, q=q)

@@ -1062,8 +1062,8 @@ def semantic_dedup_two_level(corpus: DataFrame, threshold: float = 0.9,
     Cache lifecycle: the two persists (corpus, assignment) live as
     long as the returned lazy plan — long-lived sessions should use
     :func:`semantic_dedup_two_level_tracked` and unpersist on
-    eviction (q_dedup_semantic holds them in the plan-persist stamp
-    cache). This convenience form discards the handles."""
+    eviction (q_dedup_semantic hands them to ``io.session_cached``).
+    This convenience form discards the handles."""
     out, _cached = semantic_dedup_two_level_tracked(
         corpus, threshold=threshold, target_cluster=target_cluster,
         id_col=id_col, vec_col=vec_col, sample_mult=sample_mult,
@@ -1149,8 +1149,8 @@ def semantic_dedup_incremental(corpus: DataFrame, new: DataFrame,
     Cache lifecycle: the corpus persist lives as long as the returned
     lazy plan — long-lived sessions should use
     :func:`semantic_dedup_incremental_tracked` and unpersist on
-    eviction (q_dedup_semantic_incr holds it in the plan-persist
-    stamp cache). This convenience form discards the handle."""
+    eviction (q_dedup_semantic_incr hands it to
+    ``io.session_cached``). This convenience form discards the handle."""
     out, _cached = semantic_dedup_incremental_tracked(
         corpus, new, threshold=threshold,
         target_cluster=target_cluster, id_col=id_col, vec_col=vec_col,

@@ -122,360 +122,27 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # 50-window, every query gets a row within 3 rotations.
 #
 # Ranks are parsed from the committed CORRECTNESS_r{N}.json artifacts
-# at import time (see _signal_rank) — no per-round bookkeeping. The
-# static tuples below are only the round-4 fallback snapshot for
-# environments without the repo root.
+# at import time (see _signal_rank) — no per-round bookkeeping beyond
+# the edit ledger below.
 # ---------------------------------------------------------------------------
 
-# Red in r2+r3, root-caused and fixed this round (NDJSON replay
-# micro-truncation; oracle HUGEINT cast) — pinned ahead of even the
-# never-verified group so the fixes are re-checked no matter what.
-_PINNED_FIRST: tuple[str, ...] = (
-    "q_scan_pysource", "q_stream_session", "q_stream_cdc_apply",
-)
-
-# r1 rows-only green, upgraded to exact oracles in r2; the upgraded
-# oracle has never been driver-run. Rank between the zero-signal group
-# and the r1 greens.
-_UPGRADED_R02: tuple[str, ...] = (
-    "q_agg_approx_distinct", "q_pagerank", "q_agg_qsketch", "q_agg_kmv",
-)
-
-# Queries whose implementation or oracle was EDITED in round 5 (new
-# oracles for formerly rows-only checks; real WAV decode; scaled-int
-# LSH buckets; CDC runtime hardening): their pre-r5 driver greens no
-# longer certify the current code, so cap their rank just behind the
-# never/stale groups until a round-5+ driver row lands (the <= 4.0
-# guard makes the demotion self-expiring).
-_EDITED_R05: tuple[str, ...] = (
-    "q_cmd_pipe", "q_dedup_simhash", "q_sim_ann", "q_multimodal_decode",
-    "q_multimodal_meta", "q_dedup_embedding", "q_stream_cdc_apply",
-)
-
-# Queries whose implementation or oracle was EDITED in round 6
-# (engine-exact k-means quantizer + full-SQL IVF oracle; PPM image
-# decode; REAL RIFF/AVI video decode replacing the stub — all three
-# multimodal queries' payloads/oracles changed; CDC bench split; the
-# third work block's _cdc_apply_fn extraction touched the merge path
-# under every stream_cdc_apply consumer): pre-r6 signals no longer
-# certify the current code — demote until an r6+ driver row lands.
-_EDITED_R06: tuple[str, ...] = (
-    "q_sim_ivf", "q_multimodal_decode", "q_cdc_read_pruned",
-    "q_vocab_build", "q_multimodal_meta", "q_multimodal_frames",
-    "q_stream_cdc_apply", "q_cdc_deletes",
-)
-
-# Queries whose implementation, oracle, or a shared helper they call
-# was EDITED in round 7: the stamp-cache fixture extraction
-# (NDJSON/ORC/CSV/partitioned-docs/CDC scans), the graph edge-cache
-# key change (source stamp + dead-session eviction), semi_join_auto
-# replacing the static dup/eval-set broadcasts, the q_agg_moments
-# HUGEINT/decimal per-row-product fix, the q_decayed_topk 31-day
-# window bound — plus the r6-refactor-touched similarity queries the
-# verdict asked to rotate (quantizer dedup commit; q_embed_pca's
-# changed kernel+oracle was never added to _EDITED_R06). Pre-r7
-# driver greens no longer certify this code — demote until an r7+
-# row lands (self-expiring via the <= 6.0 guard).
-_EDITED_R07: tuple[str, ...] = (
-    "q_agg_moments", "q_decayed_topk",
-    "q_scan_ndjson", "q_scan_orc", "q_scan_csv",
-    "q_scan_partition_pruned", "q_join_dpp",
-    "q_graph_triangles", "q_graph_bfs", "q_graph_sssp",
-    "q_graph_kcore", "q_graph_labelprop",
-    "q_dedup_segments", "q_dedup_chunks", "q_decontaminate",
-    "q_embed_pca", "q_sim_ann", "q_sim_pq",
-    # r7 third block: per-round shuffle-hash joins in pagerank()
-    # (hash-identical by construction, but the loop's physical plan
-    # changed — re-certify); the shared near-dup pair cache
-    # (_neardup_pairs) under both ngram-family consumers
-    "q_pagerank", "q_dedup_ngram", "q_dedup_components",
-)
-
-# Queries whose implementation, oracle, or a shared helper they call
-# was EDITED in round 8: the fixed-point sweep (every rounded-double
-# output replaced by integer div / floor(x·1e9+0.5) after the r7
-# q_join_grid_density hash red proved round()-on-double is
-# engine-build-dependent); the streaming cent conversion switched
-# from np.round (half-to-even) to half-away-from-zero
-# (cents_half_up, under q_stream_ewma via stateful_user_ewma); the
-# persist/unpersist hygiene pass on the shared near-dup pair and
-# prefix-filter caches (q_dedup_prefix / q_dedup_ngram /
-# q_dedup_components). Pre-r8 driver greens no longer certify this
-# code — demote until an r8+ row lands (self-expiring via the
-# <= 7.0 guard).
-_EDITED_R08: tuple[str, ...] = (
-    "q_join_grid_density", "q_attribution_removal",
-    "q_time_weighted_avg", "q_pareto_share", "q_sql_promo_share",
-    "q_agg_corr", "q_agg_moments", "q_agg_percentile_disc",
-    "q_feature_scale", "q_dedup_segments", "q_dedup_chunks",
-    "q_stream_ewma", "q_dedup_prefix", "q_dedup_ngram",
-    "q_dedup_components",
-    # cents_half_up also flows through stateful_user_totals (the
-    # same helper family as stateful_user_ewma) — omitted at r8 close
-    # (ADVICE r8); recorded here for an accurate edit ledger. No-op
-    # for ranking: its r8 green postdates the rounding commit.
-    "q_stream_stateful_totals",
-    # late-r8 free conversions: these three are r3 greens ALREADY in
-    # the r8 window, so demoting them reorders but cannot evict any
-    # drain — their r8 row certifies the new fixed-point outputs
-    "q_collocations", "q_repetition", "q_embed_quantize",
-    # late-r8 TZ fix: the ordered-replay sentinel cutoff crossed the
-    # Python boundary as a naive datetime, re-interpreted via the
-    # PROCESS-LOCAL zone (TZ=Asia/Kathmandu sweep red) — now integer
-    # epoch-micros end to end. Both consumers are r3 greens already
-    # in-window, so demotion reorders without evicting any drain.
-    "q_stream_dedup_window", "q_stream_outer_join",
-)
-
-# Queries whose implementation, oracle, or a shared helper they call
-# was EDITED in round 9: the q_join_grid_density oracle HUGEINT cast
-# (the judge-proven r7/r8 driver-red root cause — DuckDB renders a
-# bare SUM's HUGEINT to pandas as float64, hashing 9.0 vs Spark's 9);
-# it is driver-red so rank 0 keeps it at the front regardless — the
-# entry is the edit LEDGER. Extended as r9 edits land.
-_EDITED_R09: tuple[str, ...] = (
-    "q_join_grid_density",
-    # r9 ADVICE: prefix_filter_pairs now routes its eager checkpoint
-    # through io.checkpoint_tracked and the query caches (df, ids)
-    # with eviction via free_checkpoint — value-identical plumbing,
-    # demoted anyway per the edit discipline.
-    "q_dedup_prefix",
-)
-
-# Queries whose implementation or oracle was EDITED in round 10.
-# Extended as r10 edits land.
-_EDITED_R10: tuple[str, ...] = (
-    # integer-plane LSH rewrite (similarity._hyperplanes/lsh_bucket):
-    # the oracle's plane constants are now exact int literals — both
-    # downstream queries demoted for fresh certification.
-    "q_sim_ann",
-    "q_dedup_embedding",
-    # round(x, N>0) → fixed-point conversion batch (quality_ppb,
-    # tfidf_micro, entropy_micro, sum_lp_micro/avg_logprob_ppb,
-    # metric_micro): output schemas changed — fresh certification.
-    "q_text_quality",
-    "q_tfidf",
-    "q_text_entropy",
-    "q_lm_score",
-    "q_multimodal_decode",
-    # cosine_topk grew an exclude_same_id param (default preserves
-    # the old behavior; knn_label passes False) — demote its one
-    # query caller for fresh certification anyway. r5 green already
-    # inside the window, so this costs no drain slot.
-    "q_sim_topk",
-)
-
-# Queries whose implementation or oracle was EDITED in round 11.
-# Extended as r11 edits land.
-_EDITED_R11: tuple[str, ...] = (
-    # the final round(x, N>0) → fixed-point conversion batch (nano
-    # floor-scale for median/IQR/percent_rank/cume_dist/interp; pure
-    # integer div for EWMA/confidence/lift/pct_change/logit/A-ES
-    # priority; exact femto integer for MaxSim): output schemas
-    # changed — fresh certification. All ten are r6 greens already
-    # inside the r11 window, so the demotion reorders without
-    # evicting any drain.
-    "q_rolling_median",
-    "q_anomaly_iqr",
-    "q_window_distribution",
-    "q_window_ewma",
-    "q_resample_interp",
-    "q_basket_rules",
-    "q_period_over_period",
-    "q_quality_classifier",
-    "q_sim_maxsim",
-    "q_sample_weighted",
-    # oracle-only: HUGEINT→DOUBLE casts routed through VARCHAR (the
-    # r8 q_agg_moments rule) so the compare stays exact past 2^64
-    "q_agg_stats",
-)
-
-# Queries whose implementation or oracle was EDITED in round 12.
-# Extended as r12 edits land.
-_EDITED_R12: tuple[str, ...] = (
-    # re-cut to a BOUNDED query batch (vec_id < 2000) so the exact
-    # brute-force form stops being corpus-quadratic (the r11
-    # verdict's one weak grade); oracle changed identically.
-    "q_knn_label",
-    # ann_lsh_topk grew an exclude_same_id param (default preserves
-    # the old behavior) — demote its one query caller for fresh
-    # certification per the r10 cosine_topk precedent.
-    "q_sim_ann",
-    # persist-lifecycle rework (r11 ADVICE): both now build through
-    # tracked operators + the _PLAN_PERSIST_CACHE stamp cache —
-    # value-identical plumbing, demoted per the edit discipline.
-    "q_dedup_containment",
-    "q_fingerprint_winnow",
-    # rendezvous keys now hash under the 'k:' prefix (disjoint from
-    # the NULL sentinel domain) — assignments CHANGED; oracle
-    # restates the same prefix.
-    "q_shard_rendezvous",
-    # oracle-builder refactor only: the k-means trainer CTEs moved to
-    # the shared _kmeans_assign_cte_sql (semantic-dedup twin reuse);
-    # emitted SQL verified byte-identical (md5-pinned in
-    # tests/test_plans.py is not needed — recorded in NOTES), query
-    # fn untouched. Already in the r12 window (r7 drain), so this
-    # ledger entry reorders without evicting anything.
-    "q_sim_ivf",
-)
-
-# Queries whose implementation or oracle was EDITED in round 13.
-_EDITED_R13: tuple[str, ...] = (
-    # re-registered on the TWO-LEVEL corpus-proportional trainer
-    # (semantic_dedup_two_level: coarse driver Lloyd + distributed
-    # per-cell fine Lloyds via applyInPandas — the r12 verdict's
-    # weak-grade fix); oracle rebuilt from _kmeans2_cte_sql with the
-    # kdef geometry derivation. Assignments (and therefore outputs)
-    # CHANGED — fresh certification required.
-    "q_dedup_semantic",
-    # ppjoin SIZE BAND landed in prefix_filter_pairs' candidate join
-    # (t·|a| <= |b| <= |a|/t, lossless — brute-force twin proves it;
-    # measured 24.3% candidate cut at sf0.1). Output-identical, but
-    # the r12 value-identical-plumbing precedent demotes anyway.
-    "q_dedup_prefix",
-    # span formulas re-cut from floor(double /) to SQL `div` (exact
-    # at any cumulative-token scale — r13 ADVICE fix); oracle already
-    # used `//`. Output-identical on every fixture; demoted per the
-    # same precedent.
-    "q_pack_sequences",
-    # empty shingle sets now excluded BEFORE banding (the all-sentinel
-    # signature made the LSH candidate join quadratic in short-doc
-    # count — r13 review catch). Lossless for threshold > 0 and
-    # value-identical on the fixture (no short/NULL docs), but the
-    # operator PLAN changed — demoted per the precedent. The sibling
-    # text.py kernel NULL guards are fixture-unreachable branches and
-    # their consumers are editcheck-ACKED instead.
-    "q_dedup_minhash",
-    "q_dedup_incremental",
-    # --- r13 OPTIMIZATION-round edits (all value-identical, each
-    # verified by local oracle sweeps at sf0.01, the heavies also at
-    # sf0.1; demoted per the r12 value-identical-plumbing precedent):
-    # BPE encode residual guards let-bound through transform(array(·))
-    # — the old when/contains form nested the replace chain ~2^8 deep
-    # (120 s -> 1.7 s at sf0.1 under the noop sink).
-    "q_bpe_tokens",
-    # exact cosine / MaxSim scoring re-shaped: bounded query set rides
-    # in the kernel closure, corpus streams through ONE mapInPandas
-    # pass emitting narrow rows (the old BNLJ shipped both 64-dim
-    # vectors per pair through Arrow).
-    "q_sim_topk", "q_knn_label", "q_sim_maxsim",
-    # hot Arrow kernels marked non-deterministic (guide 4.4): stops
-    # inferred-filter pushdown duplicating the kernel per join side
-    # (simhash plan: 8 -> 2 ArrowEvalPython). Pure planner hint.
-    "q_dedup_simhash", "q_dedup_embedding", "q_dedup_ngram",
-    "q_sim_ann", "q_sim_ivf", "q_sim_pq", "q_knn_label_ann",
-    "q_fingerprint_winnow", "q_dedup_containment",
-    # (second session) q_sim_ann / q_knn_label_ann additionally
-    # re-shaped onto _probe_scores_stream: the bounded query set —
-    # with its Spark-computed buckets — rides in the kernel closure
-    # and the corpus streams once; the broadcast bucket equi-join and
-    # the pair-grain probe-dedup exchange are gone (3 -> 1 exchanges
-    # per query, vector pairs no longer cross Arrow). Scores are the
-    # identical _scaled_int_sum sequence; both queries re-verified at
-    # sf0.01 + sf0.1 + TZ + SHUFFLE=7. Covered by the same demotion
-    # entries above.
-    # edit-distance blocking now persists the ranked gram table once
-    # (projection-persist left `sig` recomputing the explode+window).
-    "q_dedup_edit",
-    # two-level semantic dedup: corpus + assignment persisted via
-    # tracked forms under the plan-persist stamp cache (the pairing
-    # self-join re-ran the assignment subtree per side).
-    "q_dedup_semantic_incr",
-    # --- second r13-optimization pass (same value-identical
-    # discipline; each oracle-verified at sf0.01 AND sf0.1):
-    # edit-distance candidate join tightened to signature × signature
-    # (the prefix-filter lemma; q_dedup_edit already listed above);
-    # PageRank fixpoint re-keyed on injective long vertex ids with a
-    # final string decode — bit-identical ranks, narrower per-round
-    # shuffles.
+# The newest CORRECTNESS round, and the queries whose implementation,
+# oracle, or a shared helper they call was EDITED since it: their
+# greens up to that round no longer certify the current code, so they
+# rank 1 (right behind the never-verified and rows-only groups) until
+# a newer green row lands. Git history keeps the per-round ledgers.
+_EDITED_SINCE = 14
+_EDITED: tuple[str, ...] = (
+    # changed by commit 06516e4, after the r14 CORRECTNESS run
+    "q_fingerprint_winnow", "q_dedup_containment", "q_dedup_ngram",
+    "q_dedup_components", "q_bpe_train", "q_bpe_tokens",
+    "q_theta_setops", "q_collocations",
+    # one Spark pass plus an in-memory fixpoint loop
     "q_pagerank",
-    # theta set-algebra sketch tables (ta/tb) persisted under the
-    # plan-persist stamp cache: four consumers each, no Catalyst
-    # exchange reuse across differing aggregate tops — 18 lineitem
-    # scans per action collapse to 3.
-    "q_theta_setops",
-    # containment now emits both directed containments in ONE pass
-    # over the sized candidate table (explode of 0-2 direction
-    # structs) — the old fwd.union(rev) evaluated the self-join +
-    # groupBy subtree twice. Row set identical (oracle-verified
-    # sf0.01 + sf0.1); q_dedup_containment already listed above.
-    # range join bucketized: join key grew a 3-day epoch-bucket
-    # component (each order window spans <= 2 buckets, lossless) —
-    # the 150-value user key alone made the equi join a filtered
-    # cross-product-per-user. Identical rows at sf0.01/sf0.1 and
-    # under both TZ robustness variants.
-    "q_join_range",
-)
-
-# Queries whose implementation was EDITED in round 14 (the second
-# optimization round — every entry value-identical on the declared
-# fixtures, each oracle-verified at sf0.01 AND sf0.1; demoted per the
-# r12 value-identical-plumbing precedent).
-_EDITED_R14: tuple[str, ...] = (
-    # streamed-scoring kernels grew the bounded-query-side row-cap
-    # guard + the int64-id boundary contract (r13 VERDICT item 8 /
-    # ADVICE 1); _probe_scores_stream additionally collapses
-    # duplicate query ids (old first() semantics) and computes corpus
-    # norms only over probed candidate rows (ADVICE 2-3).
-    "q_sim_topk", "q_sim_ann", "q_sim_maxsim",
-    "q_knn_label", "q_knn_label_ann",
-    # prefix-filter ranking re-shaped: the per-doc rank window +
-    # sizes join replaced by collect_list + array_sort + slice +
-    # posexplode (same (_df, s) total order, same prefix bound, n_sh
-    # from the array size) — the window sort and one join exchange
-    # are gone (r13 VERDICT item 3).
-    "q_dedup_prefix",
-    # pagerank loop partitioning now derived from the edge input's
-    # Catalyst size estimate instead of the shuffle constant —
-    # partition-independent integer fixpoint, ranks bit-identical.
-    "q_pagerank",
-    # exact-twin percentiles share ONE array-percentile buffer (same
-    # buffer, same getPercentile per element — values bit-identical,
-    # A/B-verified in-session); t-digest batch build re-expressed as
-    # the closed-form unit-weight segmentation (estimates move within
-    # their verified rank bounds; ok-booleans unchanged).
-    "q_agg_kll", "q_agg_tdigest",
-)
-
-# Hash-green (or rows-only-by-design pass) in the r1 driver window and
-# never re-verified since — staler than the r2/r3 greens.
-_GREEN_R01: tuple[str, ...] = (
-    "q_scan_parquet", "q_scan_ndjson", "q_filter_project",
-    "q_join_broadcast", "q_join_shuffle", "q_join_semi_anti",
-    "q_join_outer", "q_join_asof", "q_join_asof_fwd", "q_agg_hash",
-    "q_agg_distinct", "q_agg_rollup_cube",
-    "q_window_rank", "q_window_analytic", "q_topk", "q_setops",
-    "q_scalar_string_date_math", "q_scalar_array_map_json",
-    "q_explode_flatten", "q_agg_percentile", "q_pivot", "q_join_range",
-    "q_window_ntile", "q_unpivot", "q_subquery_correlated",
-    "q_merge_upsert", "q_agg_histogram", "q_join_skew_salted",
-    "q_resample_ffill", "q_grouping_sets", "q_window_range_frame",
-    "q_agg_mode", "q_agg_stats",
-    "q_anomaly_zscore", "q_join_fuzzy", "q_funnel", "q_incr_agg",
-    "q_join_not_in", "q_group_ols", "q_profile",
-    "q_join_cross", "q_agg_collect", "q_scalar_null_pack",
-    "q_join_asof_nearest",
-)
-
-# Green rows in the r2/r3 driver windows (CORRECTNESS_r03.json minus
-# its three reds) — the freshest signal, so the back of the line.
-_GREEN_R03: tuple[str, ...] = (
-    "q_agg_bool", "q_text_stats", "q_lang_id", "q_fingerprint",
-    "q_dedup_ngram", "q_dedup_minhash", "q_dedup_embedding",
-    "q_sim_topk", "q_udf_module", "q_multimodal_meta",
-    "q_multimodal_frames", "q_sim_ivf", "q_udaf_grouped",
-    "q_pack_shards", "q_dedup_incremental", "q_dedup_segments",
-    "q_cap_per_source", "q_sample_mix", "q_dedup_chunks",
-    "q_quality_gopher", "q_text_normalize", "q_sample_stratified",
-    "q_embed_quantize", "q_pii_redact", "q_kmv_overlap", "q_cms_freq",
-    "q_collocations", "q_repetition", "q_window_sliding",
-    "q_window_session", "q_stream_sliding", "q_stream_stateful_totals",
-    "q_stream_stream_join", "q_stream_outer_join",
-    "q_stream_dedup_window", "q_stream_static_join", "q_stream_topk",
-    "q_pipe_compose", "q_run_concat", "q_map_broadcast",
-    "q_reduce_fanin", "q_scan_orc", "q_join_bucketed",
-    "q_agg_percentile_approx", "q_recursive_cte", "q_bitmap_distinct",
-    "q_skew_profile",
+    # cache consumers re-plumbed onto io.session_cached
+    "q_dedup_prefix", "q_dedup_edit", "q_dedup_semantic",
+    "q_dedup_semantic_incr", "q_graph_triangles", "q_graph_bfs",
+    "q_graph_sssp", "q_graph_kcore", "q_graph_labelprop",
 )
 
 
@@ -487,9 +154,11 @@ def _signal_rank() -> dict[str, float]:
     that froze the window between rounds 2 and 3). A hash-green row in
     round N ranks N; a rows-only pass ranks N−0.5 (weaker signal →
     re-verified sooner); a red or absent row contributes nothing, so
-    broken and never-checked queries always sort to the front. Falls
-    back to the static round-4 snapshot below if no artifacts are
-    readable (e.g. an installed package without the repo root)."""
+    broken and never-checked queries always sort to the front; a
+    query in ``_EDITED`` drops to rank 1 while its signal is no newer
+    than ``_EDITED_SINCE``. Without readable artifacts (e.g. an
+    installed package without the repo root) every rank is 0 and
+    registration order stands."""
     import json
     import os
     import re
@@ -497,7 +166,6 @@ def _signal_rank() -> dict[str, float]:
     rank: dict[str, float] = {}
     root = os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))))
-    found = False
     rounds: list[tuple[int, str]] = []
     try:
         for p in os.listdir(root):
@@ -516,7 +184,6 @@ def _signal_rank() -> dict[str, float]:
                 data = json.load(fh)
         except (OSError, ValueError):
             continue
-        found = True
         for name, row in data.items():
             if not isinstance(row, dict):
                 continue
@@ -527,77 +194,24 @@ def _signal_rank() -> dict[str, float]:
                 rank[name] = rnd - 0.5
             else:
                 rank[name] = 0.0
-    if found:
-        for n in _PINNED_FIRST:
-            # hand-pinned reds re-verify first until a NEWER green row
-            # supersedes the pin (max green round at pin time below)
-            if rank.get(n, 0.0) <= 3.0:
-                rank[n] = -1.0
-        for n in _EDITED_R05:
-            # r5-edited queries: any pre-r5 signal is stale — pull them
-            # into the window right behind the never/stale groups. A
-            # red (rank 0) stays at the very front; an r5+ green
-            # (rank > 4) ends the demotion.
-            if 0 < rank.get(n, 0.0) <= 4.0:
-                rank[n] = 1.25
-        for n in _EDITED_R06:
-            # r6-edited: same rule, one round later (self-expiring
-            # once an r6+ green lands).
-            if 0 < rank.get(n, 0.0) <= 5.0:
-                rank[n] = 1.2
-        for n in _EDITED_R07:
-            # r7-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 6.0:
-                rank[n] = 1.15
-        for n in _EDITED_R08:
-            # r8-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 7.0:
-                rank[n] = 1.1
-        for n in _EDITED_R09:
-            # r9-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 8.0:
-                rank[n] = 1.05
-        for n in _EDITED_R10:
-            # r10-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 9.0:
-                rank[n] = 1.02
-        for n in _EDITED_R11:
-            # r11-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 10.0:
-                rank[n] = 1.01
-        for n in _EDITED_R12:
-            # r12-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 11.0:
-                rank[n] = 1.005
-        for n in _EDITED_R13:
-            # r13-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 12.0:
-                rank[n] = 1.002
-        for n in _EDITED_R14:
-            # r14-edited: same rule, one round later again.
-            if 0 < rank.get(n, 0.0) <= 13.0:
-                rank[n] = 1.001
-        return rank
-    rank.update({n: 3.0 for n in _GREEN_R03})
-    rank.update({n: 1.0 for n in _GREEN_R01})
-    rank.update({n: 0.5 for n in _UPGRADED_R02})
-    rank.update({n: -1.0 for n in _PINNED_FIRST})
+    for n in _EDITED:
+        # a red (rank 0) stays at the very front; a green newer than
+        # the edit ledger ends the demotion
+        if 0 < rank.get(n, 0.0) <= _EDITED_SINCE:
+            rank[n] = 1.0
     return rank
 
 
 def free_session_caches(spark: SparkSession,
                         sweep_orphans: bool = False) -> int:
-    """Session hygiene for LONG-LIVED sessions: release every tracked
-    Spark-resident cache the query layer built — the checkpointed
-    pair graphs (_PAIR_CACHE, _PREFIX_PAIR_CACHE), the graph edge
-    table (_EDGE_CACHE), and the plan-persist intermediates
-    (containment's inverted indexes, winnow's fingerprints,
-    edit-distance's gram table). Entries rebuild on demand, so this
-    trades recompute for memory — the knob a session running hundreds
-    of distinct queries needs (the r13 catch: a full-registry sf0.1
-    sweep OOMed the JVM at query ~209 purely from ACCUMULATED cache
-    blocks; each query re-verified green in a fresh session). Returns
-    the number of cache entries released.
+    """Session hygiene for LONG-LIVED sessions: release every entry
+    this session holds in ``io.session_cached`` (checkpointed pair
+    graphs and edge table, persisted plan intermediates). Entries
+    rebuild on demand, so this trades recompute for memory — the knob
+    a session running hundreds of distinct queries needs (the r13
+    catch: a full-registry sf0.1 sweep OOMed the JVM at query ~209
+    purely from ACCUMULATED cache blocks). Returns the number of
+    entries and blocks released.
 
     ``sweep_orphans=True`` additionally unpersists EVERY remaining
     persistent RDD in the session — the orphaned per-iteration
@@ -606,32 +220,12 @@ def free_session_caches(spark: SparkSession,
     cannot tell an orphan from a checkpointed frame the CALLER still
     holds, and unpersisting a localCheckpoint is data LOSS (lineage
     is truncated — the next action raises, it does not rebuild).
-    Default False is always safe: tracked caches rebuild on demand."""
-    from gasket_spark.io import free_checkpoint
-    from gasket_spark.queries import llm, relational
+    Default False is always safe: cached entries rebuild on demand."""
+    from gasket_spark.io import release_session_cache
 
-    app = spark.sparkContext.applicationId
-    n = 0
-    for cache in (llm._PAIR_CACHE, llm._PREFIX_PAIR_CACHE,
-                  relational._EDGE_CACHE):
-        for k in list(cache):
-            if k[0] == app:
-                free_checkpoint(spark, cache[k][1])
-            del cache[k]
-            n += 1
-    for k in list(llm._PLAN_PERSIST_CACHE):
-        if k[1] == app:
-            for frame in llm._PLAN_PERSIST_CACHE[k][1]:
-                frame.unpersist(False)
-        del llm._PLAN_PERSIST_CACHE[k]
-        n += 1
+    n = release_session_cache(spark)
     if not sweep_orphans:
         return n
-    # With every tracked cache cleared, a persistent RDD still in the
-    # session is — for the query layer's own workloads — an ORPHANED
-    # per-call / per-iteration localCheckpoint (iterative graph
-    # queries cut lineage each round). See the docstring for why this
-    # sweep is opt-in.
     try:
         live = dict(spark.sparkContext._jsc.getPersistentRDDs())
     except Exception:  # pragma: no cover - dead/stopped context

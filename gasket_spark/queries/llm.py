@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from gasket_spark.functions import text as T
-from gasket_spark.io import read_table
+from gasket_spark.io import checkpoint_tracked, read_table, session_cached
 from gasket_spark.operators import dedup as D
 from gasket_spark.operators import semi_join_auto
 from gasket_spark.operators import multimodal as M
@@ -180,98 +180,23 @@ def _docs_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(mutated)
 
 
-_PAIR_CACHE: dict[tuple[str, str, str],
-                  tuple[DataFrame, frozenset[int]]] = {}
-
-# q_dedup_prefix's eagerly-checkpointed exact-Jaccard pair result,
-# same (applicationId, sf_dir, source stamp) lifecycle as _PAIR_CACHE
-# — eviction must free_checkpoint the tracked RDD ids.
-_PREFIX_PAIR_CACHE: dict[tuple[str, str, str],
-                         tuple[DataFrame, frozenset[int]]] = {}
-
-# (tag, applicationId, sf_dir, source stamp) -> (lazy result, the
-# plain-persist() intermediate frames its plan holds). Generic home
-# for queries whose operator persists mid-plan (containment's
-# inverted indexes, edit-distance's gram table, winnow's fingerprint
-# table): repeat invocations reuse ONE plan instead of stacking a
-# fresh set of cached blocks per call, and eviction unpersists the
-# intermediates (the r11 ADVICE finding). Plain persist — unlike the
-# localCheckpoint caches above, DataFrame.unpersist() releases these.
-_PLAN_PERSIST_CACHE: dict[tuple[str, str, str, str],
-                          tuple[DataFrame, tuple[DataFrame, ...]]] = {}
-
-
-def _plan_persist_cached(spark: SparkSession, sf_dir: str, tag: str,
-                         build) -> DataFrame:
-    """Return the cached lazy result for (tag, session, fixture), or
-    run ``build() -> (df, persisted_frames)`` and cache it. Evicts
-    dead-session entries and same-tag/same-dir entries whose source
-    stamp changed, unpersisting their intermediates when the session
-    is still this one."""
-    import os as _os
-
-    from gasket_spark.io import source_stamp
-
-    app = spark.sparkContext.applicationId
-    key = (tag, app, _os.path.normpath(sf_dir),
-           source_stamp(_os.path.join(sf_dir, "documents.parquet")))
-    hit = _PLAN_PERSIST_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    # dead-session entries purge regardless of tag (their DataFrame
-    # handles are dead anyway — the r13 ADVICE fix: the old k[0] ==
-    # tag filter let entries for never-re-invoked tags linger across
-    # sessions); same-session stale-stamp entries purge per tag+dir
-    # and get their intermediates unpersisted.
-    for k in [k for k in _PLAN_PERSIST_CACHE
-              if k[1] != app
-              or (k[0] == tag and k[2] == key[2] and k[3] != key[3])]:
-        if k[1] == app:
-            for frame in _PLAN_PERSIST_CACHE[k][1]:
-                frame.unpersist(False)
-        del _PLAN_PERSIST_CACHE[k]
-    df, persisted = build()
-    _PLAN_PERSIST_CACHE[key] = (df, tuple(persisted))
-    return df
-
-
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped exact n-gram Jaccard pair graph over the
     near-dup corpus (threshold 0.5, max_doc_freq 8), shared by
     q_dedup_ngram and q_dedup_components.
 
     ``ngram_jaccard_pairs`` itself is a lazy plan; this wrapper
-    ``localCheckpoint``s it once per (session, sf_dir, documents
-    stamp) in ``_PAIR_CACHE``, so the second consumer and every warm
-    call read the materialized pairs instead of re-running the
-    shingle kernel and the posting-list shuffles. applicationId is in
-    the key so a dead session's checkpoint can't leak, and the source
-    stamp so a rewritten fixture can't serve stale pairs; other-app
-    and stale entries are evicted on a miss, their blocks freed."""
-    import os as _os
+    ``localCheckpoint``s it once per session, sf_dir and documents
+    stamp (``io.session_cached``), so the second consumer and every
+    warm call read the materialized pairs instead of re-running the
+    shingle kernel and the posting-list shuffles."""
+    def _build():
+        return checkpoint_tracked(D.ngram_jaccard_pairs(
+            _docs_with_near_dups(spark, sf_dir), threshold=0.5,
+            max_doc_freq=8))
 
-    from gasket_spark.io import (
-        checkpoint_tracked, free_checkpoint, source_stamp)
-
-    app = spark.sparkContext.applicationId
-    key = (app, _os.path.normpath(sf_dir),
-           source_stamp(_os.path.join(sf_dir, "documents.parquet")))
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached[0]
-    for k in [k for k in _PAIR_CACHE
-              if k[0] != app or (k[1] == key[1] and k[2] != key[2])]:
-        # same-session stale entries: FREE the checkpoint blocks
-        # (DataFrame.unpersist can't — io.free_checkpoint releases
-        # the tracked RDD ids); dead-session ids are skipped inside.
-        if k[0] == app:
-            free_checkpoint(spark, _PAIR_CACHE[k][1])
-        del _PAIR_CACHE[k]
-    corpus = _docs_with_near_dups(spark, sf_dir)
-    pairs, ids = checkpoint_tracked(
-        D.ngram_jaccard_pairs(corpus, threshold=0.5, max_doc_freq=8))
-    _PAIR_CACHE[key] = (pairs, ids)
-    return pairs
+    return session_cached(spark, "neardup_pairs", sf_dir, "documents",
+                          _build)
 
 
 _NEAR_DUP_SQL = """
@@ -2430,12 +2355,12 @@ def q_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # form re-scanned lineitem 18 times in one action (plan
         # capture; 7.9 s -> 2.0 s noop median at sf0.1). Each sketch
         # table is ≤ k=1024 hashes per group — KBs of residency —
-        # and the handles live in the plan-persist stamp cache so
-        # eviction/free_session_caches can release them (the same
-        # lifecycle answer that replaced the old "never persist
-        # in-function" stance here). In a real pipeline the sketch
-        # TABLE is stored once and re-read — the durable version of
-        # the same sharing.
+        # and the handles live in io.session_cached, keyed on the
+        # lineitem stamp, so a rewrite or free_session_caches
+        # releases them (the same lifecycle answer that replaced the
+        # old "never persist in-function" stance here). In a real
+        # pipeline the sketch TABLE is stored once and re-read — the
+        # durable version of the same sharing.
         ta = theta_from_kmv(kmv_sketch(a, g, "l_partkey", 1024)).persist()
         tb = theta_from_kmv(kmv_sketch(b, g, "l_partkey", 1024)).persist()
         # eager fills (r14): the four consumers are concurrent cold
@@ -2482,7 +2407,7 @@ def q_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.abs(F.col("_er") - F.col("n_a")) <= tol)
             .alias("recombine_ok")), (ta, tb)
 
-    return _plan_persist_cached(spark, sf_dir, "theta", _build)
+    return session_cached(spark, "theta", sf_dir, "lineitem", _build)
 
 
 @query(
@@ -3123,29 +3048,16 @@ def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix principle loses no pair, the property that lets you
     trust it at 100 TB (same oracle discipline as
     q_join_spatial_grid's grid pruning). The eagerly-checkpointed
-    pair result is held in a stamp cache (same lifecycle as
-    _PAIR_CACHE): repeat invocations reuse it, and eviction frees
-    the checkpoint blocks via io.free_checkpoint instead of leaving
-    them resident for the session lifetime."""
-    import os as _os
+    pair result is held per session, sf_dir and documents stamp
+    (``io.session_cached``): repeat invocations reuse it, and
+    eviction frees the checkpoint blocks instead of leaving them
+    resident for the session lifetime."""
+    def _build():
+        return D.prefix_filter_pairs_tracked(
+            _docs_with_near_dups(spark, sf_dir), threshold=0.5)
 
-    from gasket_spark.io import free_checkpoint, source_stamp
-
-    app = spark.sparkContext.applicationId
-    key = (app, _os.path.normpath(sf_dir),
-           source_stamp(_os.path.join(sf_dir, "documents.parquet")))
-    cached = _PREFIX_PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached[0]
-    for k in [k for k in _PREFIX_PAIR_CACHE
-              if k[0] != app or (k[1] == key[1] and k[2] != key[2])]:
-        if k[0] == app:
-            free_checkpoint(spark, _PREFIX_PAIR_CACHE[k][1])
-        del _PREFIX_PAIR_CACHE[k]
-    corpus = _docs_with_near_dups(spark, sf_dir)
-    pairs, ids = D.prefix_filter_pairs_tracked(corpus, threshold=0.5)
-    _PREFIX_PAIR_CACHE[key] = (pairs, ids)
-    return pairs
+    return session_cached(spark, "prefix_pairs", sf_dir, "documents",
+                          _build)
 
 
 # ---------------------------------------------------------------------------
@@ -3222,8 +3134,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplied rational threshold so the cut is engine-exact.
     Both directions derive from ONE self-join pass
     (operators/dedup.py:containment_pairs). The plan's persisted
-    inverted indexes live in the stamp cache — repeat invocations
-    reuse one plan, eviction unpersists (r11 ADVICE)."""
+    inverted indexes live in ``io.session_cached`` — repeat
+    invocations reuse one plan, eviction unpersists (r11 ADVICE)."""
     def _build():
         corpus = _containment_corpus(spark, sf_dir) \
             .repartition(spark.sparkContext.defaultParallelism)
@@ -3231,7 +3143,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus, n=3, threshold_num=9, threshold_den=10,
             max_doc_freq=32)
 
-    return _plan_persist_cached(spark, sf_dir, "containment", _build)
+    return session_cached(spark, "containment", sf_dir, "documents", _build)
 
 
 # documents ∪ passage copies: tokens 5..34 of every >=40-token doc,
@@ -3355,13 +3267,11 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~O(tokens·k) interpreted work per doc, and the 2-file parquet
     fixture would otherwise run it on 2 cores (measured 78 s vs ~6 s
     at sf0.1); the fingerprint table is persisted so the candidate
-    self-join's two sides don't recompute it — held in the stamp
-    cache so repeat invocations reuse one plan and eviction
-    unpersists (r11 ADVICE)."""
-    def _build():
-        return _winnow_build(spark, sf_dir)
-
-    return _plan_persist_cached(spark, sf_dir, "winnow", _build)
+    self-join's two sides don't recompute it — held in
+    ``io.session_cached`` so repeat invocations reuse one plan and
+    eviction unpersists (r11 ADVICE)."""
+    return session_cached(spark, "winnow", sf_dir, "documents",
+                          lambda: _winnow_build(spark, sf_dir))
 
 
 def _winnow_build(spark: SparkSession,
@@ -3708,15 +3618,15 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash check proves the blocking loses no pair on this corpus —
     ASCII text, where Spark's codepoint and DuckDB's byte counting
     agree (pinned in tests/test_cross_engine.py). The gram table the
-    plan persists twice over lives in the stamp cache (r11 ADVICE
-    lifecycle; operators/dedup.py:edit_distance_pairs)."""
+    plan persists twice over lives in ``io.session_cached`` (r11
+    ADVICE lifecycle; operators/dedup.py:edit_distance_pairs)."""
     def _build():
         return D.edit_distance_pairs_tracked(
             _typo_corpus(spark, sf_dir).repartition(
                 spark.sparkContext.defaultParallelism),
             d=3, q=8)
 
-    return _plan_persist_cached(spark, sf_dir, "edit", _build)
+    return session_cached(spark, "edit", sf_dir, "documents", _build)
 
 
 def _bpe_merges(docs: DataFrame) -> list[tuple]:
@@ -4001,7 +3911,7 @@ def q_dedup_semantic_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         return S.semantic_dedup_incremental_tracked(
             emb, _clone_batch(emb), threshold=0.95, target_cluster=64)
 
-    return _plan_persist_cached(spark, sf_dir, "semantic_incr", _build)
+    return session_cached(spark, "semantic_incr", sf_dir, "embeddings", _build)
 
 
 
@@ -4042,14 +3952,14 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer that catches paraphrases/re-encodings sharing zero n-grams,
     ABOVE MinHash/SimHash in a curation stack
     (operators/similarity.py:semantic_dedup_two_level). The corpus
-    and assignment persists live in the plan-persist stamp cache
-    (r13: the pairing self-join re-ran the whole clone-corpus
-    construction and both assignment UDF passes per side without
-    them — intermediates only; the pairing/report still computes per
-    action)."""
+    and assignment persists live in ``io.session_cached``, keyed on
+    the embeddings stamp (r13: the pairing self-join re-ran the whole
+    clone-corpus construction and both assignment UDF passes per side
+    without them — intermediates only; the pairing/report still
+    computes per action)."""
     def _build():
         return S.semantic_dedup_two_level_tracked(
             _semantic_corpus(spark, sf_dir), threshold=0.95,
             target_cluster=64)
 
-    return _plan_persist_cached(spark, sf_dir, "semantic", _build)
+    return session_cached(spark, "semantic", sf_dir, "embeddings", _build)

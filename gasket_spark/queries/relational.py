@@ -28,7 +28,8 @@ from pyspark.sql.types import (
 
 from gasket_spark.functions.numeric import iscaled, money_avg, money_sum
 from gasket_spark.io import (
-    df_to_ndjson, read_table, source_stamp, stamp_cached,
+    checkpoint_tracked, df_to_ndjson, read_table, session_cached,
+    stamp_cached,
 )
 from gasket_spark.queries import query
 
@@ -2876,52 +2877,30 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph: triangle counting / BFS (round 6)
 # ---------------------------------------------------------------------------
 
-_EDGE_CACHE: dict[tuple[str, str, str],
-                  tuple[DataFrame, frozenset[int]]] = {}
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected edge set (u < v) of the part co-purchase
     graph: parts sharing an order are adjacent; every 10th order keeps
     the graph a deterministic sample. Materialized once
     (localCheckpoint) because every graph query fans it into several
-    join arms — and CACHED per (session, sf_dir, source stamp): six
-    graph queries share one edge build instead of each paying the
-    items self-join. Keyed by applicationId so a checkpointed frame
-    from a dead session can never be served to a new one, and by the
-    lineitem parquet's (size, mtime_ns) stamp so a rewritten fixture
-    can't be served stale edges. Entries from other applicationIds
-    are evicted on each miss — dead sessions' frames don't accumulate."""
-    from gasket_spark.io import checkpoint_tracked, free_checkpoint
+    join arms — and held per session, sf_dir and lineitem stamp
+    (``io.session_cached``): the graph queries share one edge build
+    instead of each paying the items self-join, and a rewritten
+    lineitem is never served stale edges."""
+    def _build():
+        li = read_table(spark, sf_dir, "lineitem")
+        items = (li.filter(F.col("l_orderkey") % 10 == 0)
+                 .select(F.col("l_orderkey").alias("ok"),
+                         F.col("l_partkey").alias("pk"))
+                 .distinct())
+        a, b = items.alias("a"), items.alias("b")
+        return checkpoint_tracked(
+            a.join(b, (F.col("a.ok") == F.col("b.ok"))
+                   & (F.col("a.pk") < F.col("b.pk")))
+            .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+            .distinct())
 
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.normpath(sf_dir),
-           source_stamp(os.path.join(sf_dir, "lineitem.parquet")))
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached[0]
-    stale = [k for k in _EDGE_CACHE
-             if k[0] != app or (k[1] == key[1] and k[2] != key[2])]
-    for k in stale:
-        # same-session stale stamps: FREE the checkpoint blocks
-        # (io.free_checkpoint — a dict delete alone leaves them
-        # resident until JVM GC); dead-session ids no-op inside.
-        if k[0] == app:
-            free_checkpoint(spark, _EDGE_CACHE[k][1])
-        del _EDGE_CACHE[k]
-    li = read_table(spark, sf_dir, "lineitem")
-    items = (li.filter(F.col("l_orderkey") % 10 == 0)
-             .select(F.col("l_orderkey").alias("ok"),
-                     F.col("l_partkey").alias("pk"))
-             .distinct())
-    a, b = items.alias("a"), items.alias("b")
-    edges, ids = checkpoint_tracked(
-        a.join(b, (F.col("a.ok") == F.col("b.ok"))
-               & (F.col("a.pk") < F.col("b.pk")))
-        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct())
-    _EDGE_CACHE[key] = (edges, ids)
-    return edges
+    return session_cached(spark, "copurchase_edges", sf_dir, "lineitem",
+                          _build)
 
 
 _BFS_EDGE_SQL = """

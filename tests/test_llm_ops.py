@@ -1972,32 +1972,85 @@ class TestSessionCacheHygiene:
     def test_free_session_caches_releases_everything_and_rebuilds(
             self, spark):
         """free_session_caches releases EVERY session-resident block —
-        the tracked stamp caches AND the orphaned per-iteration
-        localCheckpoints iterative queries leave behind (the r13
-        catch: a full-registry sf0.1 sweep OOMed at query ~209 purely
-        from accumulated blocks) — and everything rebuilds on demand."""
+        each kind of io.session_cached entry (checkpointed pairs,
+        operator-tracked checkpoint ids, persisted frames, the
+        checkpointed edge table) AND, on opt-in, the orphaned
+        per-call localCheckpoints iterative queries leave behind (the
+        r13 catch: a full-registry sf0.1 sweep OOMed at query ~209
+        purely from accumulated blocks) — and everything rebuilds on
+        demand."""
+        from gasket_spark.io import SESSION_CACHE
         from gasket_spark.queries import QUERIES, free_session_caches
 
-        sf = "/root/testdata/sf0.001"
-        QUERIES["q_dedup_ngram"](spark, sf).count()
-        QUERIES["q_graph_triangles"](spark, sf).count()
+        sf = SF_SMALL
         jsc = spark.sparkContext._jsc
-        before = len(dict(jsc.getPersistentRDDs()))
-        assert before > 0
-        # default: tracked caches only — always safe, rebuilds on
+
+        def live():
+            return set(dict(jsc.getPersistentRDDs()))
+
+        # start from an empty session, so every block below is ours
+        free_session_caches(spark, sweep_orphans=True)
+        counts = {q: QUERIES[q](spark, sf).count()
+                  for q in ("q_dedup_ngram", "q_dedup_prefix",
+                            "q_fingerprint_winnow")}
+        held = live()
+        counts["q_graph_triangles"] = \
+            QUERIES["q_graph_triangles"](spark, sf).count()
+        edge_ids = {h for k, (_, hs) in SESSION_CACHE.items()
+                    if k[0] == "copurchase_edges" for h in hs}
+        orphans = live() - held - edge_ids
+        assert edge_ids and orphans
+        # default: cached entries only — always safe, rebuilds on
         # demand; the triangles per-call localCheckpoint stays (an
         # orphan the default must NOT touch: a caller-held checkpoint
         # is indistinguishable, and unpersisting one is data loss)
-        freed = free_session_caches(spark)
-        assert freed > 0
-        mid = len(dict(jsc.getPersistentRDDs()))
-        assert 0 < mid < before
+        assert free_session_caches(spark) == 4
+        assert not SESSION_CACHE
+        assert live() == orphans
         # opt-in sweep releases the orphans too
         free_session_caches(spark, sweep_orphans=True)
-        assert len(dict(jsc.getPersistentRDDs())) == 0
+        assert not live()
         # rebuild on demand, same results
-        n1 = QUERIES["q_dedup_ngram"](spark, sf).count()
-        assert n1 == QUERIES["q_dedup_ngram"](spark, sf).count()
+        for q, n in counts.items():
+            assert QUERIES[q](spark, sf).count() == n
+
+    def test_cached_plan_follows_the_table_it_reads(self, spark,
+                                                    tmp_path):
+        """q_theta_setops reads lineitem, so its cached plan is keyed
+        on lineitem's stamp: rewriting lineitem in place rebuilds the
+        plan over the new rows, and rewriting documents — which it
+        never reads — keeps the cached plan."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        from gasket_spark.queries import QUERIES
+
+        sf = str(tmp_path / "sf")
+        shutil.copytree(SF_SMALL, sf,
+                        copy_function=shutil.copyfile)
+        theta = QUERIES["q_theta_setops"]
+
+        def exact(df):
+            return {r.l_returnflag: (r.n_a, r.n_intersect, r.n_a_not_b)
+                    for r in df.collect()}
+
+        first = theta(spark, sf)
+        before = exact(first)
+        li = pq.read_table(f"{sf}/lineitem.parquet")
+        li = li.slice(0, li.num_rows // 2)
+        pq.write_table(li, f"{sf}/lineitem.parquet")
+        second = theta(spark, sf)
+        assert second is not first
+        want = {}
+        for flag, g in li.to_pandas().groupby("l_returnflag"):
+            a = set(g.l_partkey[g.l_orderkey % 2 == 0])
+            b = set(g.l_partkey[g.l_orderkey % 2 == 1])
+            want[flag] = (len(a), len(a & b), len(a - b))
+        assert exact(second) == want != before
+        docs = pq.read_table(f"{sf}/documents.parquet")
+        pq.write_table(docs.slice(0, 10), f"{sf}/documents.parquet")
+        assert theta(spark, sf) is second
 
 
 class TestShortNullDocRobustness:

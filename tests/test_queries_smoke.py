@@ -49,19 +49,20 @@ def test_verification_window_rotation():
     # ranks are non-decreasing along the registration order
     sigs = [rank.get(n, 0.0) for n in names]
     assert sigs == sorted(sigs)
-    # queries edited in r5/r6 must re-verify BEFORE any fresh green
-    # rotates back in: each pending edit sorts ahead of every query
-    # whose signal post-dates the demotion rank. (They may sit just
-    # past the 50-window when a large batch of brand-new queries
-    # legitimately fills it — new queries have no signal at all and
-    # go first; the edits then lead the very next round's window.)
-    from gasket_spark.queries import _EDITED_R05, _EDITED_R06
+    # queries edited since the newest CORRECTNESS round must
+    # re-verify BEFORE any fresh green rotates back in: each pending
+    # edit sorts ahead of every query whose signal post-dates the
+    # demotion rank. (They may sit just past the 50-window when a
+    # large batch of brand-new queries legitimately fills it — new
+    # queries have no signal at all and go first; the edits then lead
+    # the very next round's window.)
+    from gasket_spark.queries import _EDITED, _EDITED_SINCE
 
-    pending = [n for n in (*_EDITED_R05, *_EDITED_R06)
-               if 0 < rank.get(n, 0.0) <= 4.0]
+    pending = [n for n in _EDITED
+               if 0 < rank.get(n, 0.0) <= _EDITED_SINCE]
     if pending:
         last_pending = max(names.index(n) for n in pending)
-        fresh = [i for i, n in enumerate(names) if rank.get(n, 0.0) > 1.25]
+        fresh = [i for i, n in enumerate(names) if rank.get(n, 0.0) > 1.0]
         assert not fresh or last_pending < min(fresh)
 
 

@@ -1,4 +1,4 @@
-"""Audit the round's diff against the _EDITED_R* demotion discipline.
+"""Audit the round's diff against the ``_EDITED`` demotion discipline.
 
 The window rule: every query whose implementation, oracle, or shared
 helper changed this round must be demoted (rank < 2) so a STALE green
@@ -19,7 +19,7 @@ this tool derives it from git:
 
 BASE defaults to the last commit touching the newest committed
 CORRECTNESS_r*.json — the previous round's close. Changes to
-``queries/__init__.py`` (the demotion lists themselves), tests and
+``queries/__init__.py`` (the ``_EDITED`` ledger itself), tests and
 tools are ignored. Wide-blast helpers (io.py, session.py, utils.py)
 would flag the whole registry, which is noise — they are reported as
 a WARNING for human judgment instead of exploded into 200 rows.

@@ -87,9 +87,9 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     failures = []
     # Bound accumulated cache residency over a full-registry sweep:
-    # the query layer's stamp caches (pair graphs, edge table,
-    # plan-persist intermediates) are deliberately session-lifetime,
-    # and ~200 distinct queries' worth of them crossed the JVM heap
+    # the query layer's io.session_cached entries (pair graphs, edge
+    # table, persisted plan intermediates) are session-lifetime, and
+    # ~200 distinct queries' worth of them crossed the JVM heap
     # margin at sf0.1 (r13: OOM at query ~209, every query green in a
     # fresh session). Freeing every N queries keeps the single-session
     # sweep honest about per-query behavior while capping residency;

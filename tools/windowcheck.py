@@ -2,10 +2,10 @@
 
 The driver verifies ``queries()`` in registration order with a
 bounded (~50) window; registration order is computed from the
-committed CORRECTNESS artifacts plus the _EDITED_R* demotions
+committed CORRECTNESS artifacts plus the ``_EDITED`` demotions
 (gasket_spark/queries/__init__.py). This tool shows what the NEXT
 driver run will verify — use it before growing the registry or
-editing demotion lists.
+editing the ``_EDITED`` ledger.
 
 Usage: python tools/windowcheck.py [window_size]
 """
