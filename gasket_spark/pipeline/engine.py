@@ -46,6 +46,8 @@ class Engine:
         self.env = dict(env or {})
         self._spark = spark
         self.config_path: str | None = None
+        # pipeline name → the map sources its last build cached
+        self._cached: dict[str, list[DataFrame]] = {}
 
     # -- registry ---------------------------------------------------------
 
@@ -81,9 +83,14 @@ class Engine:
              params: list[str] | None = None) -> DataFrame:
         """Instantiate a pipeline with its input left open — the caller
         supplies ``input_df`` (≙ stdin, index.js:188-195). Lazy: returns
-        the composed DataFrame, no action triggered."""
+        the composed DataFrame, no action triggered. A ``map`` group
+        caches its source until this pipeline is built again; an action
+        on the previous build after that recomputes the source."""
         if not self.has(name):
             raise KeyError(f"no pipeline named {name!r}")
+        for src in self._cached.pop(name, []):
+            src.unpersist()
+        cached = self._cached[name] = []
         ctx = StageContext(
             spark=self.spark, name=name, params=[str(p) for p in params or []],
             env=self.env, debug=bool(os.environ.get("GASKET_DEBUG")))
@@ -106,7 +113,11 @@ class Engine:
                 src = run_stage(group[0], ctx, current_input)
                 consumers = [
                     (lambda df, s=s: run_stage(s, ctx, df)) for s in group[1:]]
-                out = ops.map_broadcast(src, consumers) if consumers else src
+                if consumers:
+                    out = ops.map_broadcast(src, consumers)
+                    cached.append(src)
+                else:
+                    out = src
             elif gtype == "reduce":
                 producers = [run_stage(s, ctx, None) for s in group[1:]]
                 first = group[0]

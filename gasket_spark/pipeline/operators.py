@@ -48,15 +48,16 @@ def fork_union(dfs: Sequence[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def map_broadcast(src: DataFrame, consumers: Sequence[Transform],
-                  cache: bool = True) -> DataFrame:
+def map_broadcast(src: DataFrame, consumers: Sequence[Transform]) -> DataFrame:
     """``map`` — fan-out (index.js:59-69, map arm :62): every source
-    row goes to *each* consumer; consumer outputs merge. ``cache``
-    materializes the source once so N consumers don't rescan it — the
-    reference gets this for free from stream teeing; Spark needs the
-    explicit persist. Caller (or engine) unpersists after the action."""
-    if cache:
-        src = src.cache()
+    row goes to *each* consumer; consumer outputs merge. The source is
+    cached, so N consumers don't rescan it — the reference gets this
+    for free from stream teeing; Spark needs the explicit persist.
+    The cache lives until ``src.unpersist()``: the caller releases it
+    once the last action that reads the result has run. ``Engine``
+    releases a pipeline's map sources when it builds that pipeline
+    again."""
+    src = src.cache()
     return fork_union([t(src) for t in consumers])
 
 

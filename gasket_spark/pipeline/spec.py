@@ -24,10 +24,14 @@ STAGE_TYPES = ("pipe", "run", "fork", "background", "map", "reduce")
 
 @dataclass
 class Stage:
-    """One pipeline stage.
+    r"""One pipeline stage.
 
-    kind: 'command' (external OS command over ``rdd.pipe``) or 'module'
-    (in-process transform: a Python callable or dotted import path).
+    kind: 'command' (external OS command, one child per partition over
+    Spark's JVM ``PipedRDD``: ``\n``, ``\r\n`` and a lone ``\r`` each end
+    an output row; the child inherits the executor's environment with
+    the engine's env and ``GASKET_PIPELINE`` laid over it; a non-zero
+    exit fails the action) or 'module' (in-process transform: a Python
+    callable or dotted import path).
     ``json=True`` lifts line input into typed records before the module
     runs and serializes back to NDJSON lines after — the reference's
     ndjson sandwich (/root/reference/index.js:73).

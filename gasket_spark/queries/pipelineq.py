@@ -148,9 +148,12 @@ def q_reduce_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_cmd_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gasket command stage (index.js:14-27): a line stream piped
+    r"""gasket command stage (index.js:14-27): a line stream piped
     through an external ``tr a-z A-Z`` child process per partition
-    (RDD.pipe, checkCode=True), read back as lines. HASH-checked, not
+    (the JVM ``PipedRDD``: each row one line; ``\n``, ``\r\n`` and a lone
+    ``\r`` end an output row; the child inherits the executor's
+    environment plus the engine's env and ``GASKET_PIPELINE``; a
+    non-zero exit fails the action), read back as lines. HASH-checked, not
     just rows-only: the input is one lowercase-only line column (a
     single string column rides the line-stream convention untouched),
     so the child's observable output is a pure string function of the

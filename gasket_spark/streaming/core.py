@@ -856,7 +856,7 @@ def run_pipeline_streaming(engine, name: str, source: DataFrame,
     """Run a registered pipeline over an unbounded source — the
     ``pipe``-verb (stdin open) in streaming form. The pipeline's
     transform chain is applied inside ``foreachBatch``, so stages that
-    streaming can't express natively (command stages via RDD.pipe,
+    streaming can't express natively (command stages over the JVM PipedRDD,
     multi-group concat) still work per micro-batch.
 
     Returns the started StreamingQuery; caller owns ``stop()``.

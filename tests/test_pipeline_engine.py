@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gasket_spark import io
 from gasket_spark.pipeline import Engine, load
 from gasket_spark.pipeline import operators as ops
 
@@ -89,6 +90,22 @@ class TestMapBroadcast:
         ])
         assert sorted(r.value for r in out.collect()) == ["A", "B", "a!", "b!"]
 
+    def test_engine_releases_the_previous_builds_cache(self, spark):
+        # a command-stage source is a new RDD on every build, so each
+        # build caches a new copy; the Engine drops the last build's
+        # copy before it builds the same pipeline again
+        jsc = spark.sparkContext._jsc
+        before = set(dict(jsc.getPersistentRDDs()))
+        eng = Engine({"m": [{"type": "map", "command": "cat"},
+                            {"type": "map", "command": "tr a-z A-Z"},
+                            {"type": "map", "command": "tr -d a"}]},
+                     spark=spark)
+        for _ in range(5):
+            out = eng.pipe("m", lines(spark, "ab", "cd"))
+            assert sorted(r.value for r in out.collect()) == [
+                "AB", "CD", "b", "cd"]
+            assert len(set(dict(jsc.getPersistentRDDs())) - before) <= 1
+
 
 class TestReduceFanin:
     def test_union_then_consumer(self, spark):
@@ -159,6 +176,65 @@ class TestCommandStages:
         out = Engine(spark=spark).exec("sh -c 'echo $GASKET_PIPELINE'")
         assert [r.value for r in out.collect()] == ["exec"]
 
+    def test_lf_crlf_and_lone_cr_each_end_an_output_row(self, spark, tmp_path):
+        eng = Engine({"p": [{"command": r"printf 'x\r\ny\rz\n'",
+                             "type": "run"}],
+                      "cat": ["cat"]}, spark=spark)
+        assert [r.value for r in eng.run("p").collect()] == ["x", "y", "z"]
+        # the rule spark.read.text applies to a file entering a pipeline
+        path = tmp_path / "mixed.txt"
+        path.write_bytes(b"a\r\nb\rc\nd e\n\nf")
+        src = io.read_text_lines(spark, str(path))
+        want = [r.value for r in src.collect()]
+        assert want == ["a", "b", "c", "d e", "", "f"]
+        assert [r.value for r in eng.pipe("cat", src).collect()] == want
+
+    def test_child_inherits_the_executor_environment(self, spark):
+        show = {"command": """sh -c 'echo "$HOME|$GASKET_PIPELINE"'""",
+                "type": "run"}
+        out = Engine({"p": [show]}, spark=spark).run("p")
+        assert [r.value for r in out.collect()] == [
+            f"{os.environ['HOME']}|p"]
+        # the engine's env is laid over the inherited one
+        out = Engine({"p": [show]}, env={"HOME": "/elsewhere"},
+                     spark=spark).run("p")
+        assert [r.value for r in out.collect()] == ["/elsewhere|p"]
+
+    def test_input_rows_are_shaped_into_lines(self, spark):
+        eng = Engine({"cat": ["cat"], "wc": ["wc -c"]}, spark=spark)
+        out = eng.pipe("cat", lines(spark, "a", None, "b").coalesce(1))
+        assert [r.value for r in out.collect()] == ["a", "", "b"]
+        # trailing \n's are stripped as str.rstrip("\n") does: "a\n\n"
+        # is written as "a\n" and "b\n\r" as "b\n\r\n"
+        out = eng.pipe("wc", lines(spark, "a\n\n", "b\n\r").coalesce(1))
+        assert [r.value.strip() for r in out.collect()] == ["6"]
+
+    def test_each_partition_runs_one_child_even_when_empty(self, spark):
+        eng = Engine({"p": ["sh -c 'cat; echo end'"]}, spark=spark)
+        src = spark.range(0, 1, 1, 4).select(
+            F.col("id").cast("string").alias("value"))
+        got = sorted(r.value for r in eng.pipe("p", src).collect())
+        assert got == ["0", "end", "end", "end", "end"]
+
+    def test_child_closing_stdin_early_succeeds(self, spark):
+        eng = Engine({"p": ["head -n 1"]}, spark=spark)
+        src = spark.range(0, 100000, 1, 2).select(
+            F.col("id").cast("string").alias("value"))
+        assert sorted(r.value for r in eng.pipe("p", src).collect()) == [
+            "0", "50000"]
+
+    def test_invalid_utf8_output_raises(self, spark):
+        eng = Engine({"p": [{"command": r"printf '\377\n'", "type": "run"}]},
+                     spark=spark)
+        with pytest.raises(Exception, match="(?i)malformed|decode"):
+            eng.run("p").collect()
+
+    def test_multibyte_text_round_trips(self, spark):
+        text = ["héllo wörld", "日本語 ✓", "emoji 🚀 end"]
+        out = Engine({"p": ["cat"]}, spark=spark).pipe(
+            "p", lines(spark, *text).coalesce(1))
+        assert [r.value for r in out.collect()] == text
+
 
 class TestJsonFraming:
     def test_ndjson_sandwich(self, spark):
@@ -172,6 +248,66 @@ class TestJsonFraming:
         out = eng.pipe("p", lines(spark, '{"k":"a","v":1}', '{"k":"b","v":2}'))
         got = sorted(json.loads(r.value)["v"] for r in out.collect())
         assert got == [2, 4]
+
+    @pytest.mark.parametrize("schema", [None, "a long, b string"])
+    def test_lift_matches_the_rdd_reader(self, spark, schema):
+        # the JVM lift is the overload spark.read.json(rdd) calls, so
+        # parsing, inference and PERMISSIVE mode are the same
+        vals = ['{"a":1,"b":"x"}', '{"a":2', None, "", '{"a":3,"c":[1]}']
+        src = lines(spark, *vals)
+        seen = []
+        stage = {"exports": lambda df, ctx: seen.append(df) or df,
+                 "json": True, "schema": schema}
+        Engine({"p": [stage]}, spark=spark).pipe("p", src)
+        reader = spark.read.schema(schema) if schema else spark.read
+        rdd_path = reader.json(src.rdd.map(lambda r: r[0]))
+        assert seen[0].schema == rdd_path.schema
+        want = [r.asDict() for r in rdd_path.collect()]
+        if schema is None:
+            # the RDD reader got the NULL line as PySpark's str(None);
+            # the lift reads a NULL line as an all-NULL record, as a
+            # pinned schema already did
+            nulls = dict.fromkeys(rdd_path.columns)
+            want = [nulls if r["_corrupt_record"] == "None" else r
+                    for r in want]
+        got = [r.asDict() for r in seen[0].collect()]
+        key = lambda r: json.dumps(r, sort_keys=True)  # noqa: E731
+        assert sorted(got, key=key) == sorted(want, key=key)
+        assert len(got) == 4  # the empty line is skipped
+
+
+class TestNoPythonWorker:
+    """Command stages and the json lift run in the JVM: their lineage
+    holds no PythonRDD, so no row reaches a Python worker."""
+
+    @staticmethod
+    def lineage(df):
+        return df._jdf.rdd().toDebugString()
+
+    @staticmethod
+    def records(spark):
+        return spark.range(6).selectExpr(
+            "to_json(named_struct('k', cast(id % 2 AS string), 'v', id))"
+            " AS value")
+
+    def test_command_stage(self, spark):
+        out = Engine({"p": ["tr a-z A-Z"]}, spark=spark).pipe(
+            "p", self.records(spark))
+        assert "PipedRDD" in self.lineage(out)
+        assert "PythonRDD" not in self.lineage(out)
+        assert out.count() == 6
+
+    @pytest.mark.parametrize("schema", [None, "k string, v long"])
+    def test_json_lift(self, spark, schema):
+        def per_k(df, ctx):
+            return df.groupBy("k").agg(F.sum("v").alias("v"))
+
+        out = Engine({"p": [{"exports": per_k, "json": True,
+                             "schema": schema}]}, spark=spark).pipe(
+            "p", self.records(spark))
+        assert "PythonRDD" not in self.lineage(out)
+        assert sorted(json.loads(r.value)["v"] for r in out.collect()) == [
+            6, 9]
 
 
 class TestRegistryApi:

@@ -15,6 +15,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gasket_spark.utils import plan_nodes  # noqa: E402
+
 # building these DataFrames EXECUTES work (streaming runs to
 # completion) — their execution properties are covered by selfcheck +
 # tests instead
@@ -24,19 +26,21 @@ EXECUTES_ON_BUILD = {
 }
 
 
-def audit(plan: str) -> dict[str, object]:
-    def count(node: str) -> int:
-        # one detail header "(id) NodeName" per physical node
-        return len(re.findall(rf"(?m)^\(\d+\) {node}\b", plan))
-
+def audit(df) -> dict[str, object]:
+    # node counts walk the executed plan (each cached subplan once);
+    # the flags below read the formatted explain text
+    nodes = plan_nodes(df)
+    plan = df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
     joins = {
-        "BHJ": count("BroadcastHashJoin"),
-        "SMJ": count("SortMergeJoin"),
-        "BNLJ": count("BroadcastNestedLoopJoin"),
-        "SHJ": count("ShuffledHashJoin"),
+        "BHJ": nodes["BroadcastHashJoin"],
+        "SMJ": nodes["SortMergeJoin"],
+        "BNLJ": nodes["BroadcastNestedLoopJoin"],
+        "SHJ": nodes["ShuffledHashJoin"],
     }
     return {
-        "exchanges": count("Exchange"),
+        "exchanges": nodes["ShuffleExchange"],
         # Exchange SinglePartition = everything funnels to ONE task
         # (global window/sort/limit). Bounded inputs (post-LIMIT rank
         # windows, 1-row aggregates) are fine; a count here on an
@@ -45,7 +49,7 @@ def audit(plan: str) -> dict[str, object]:
         "onepart": len(re.findall(r"Exchange SinglePartition", plan)),
         "joins": "+".join(f"{v}×{k}" for k, v in joins.items() if v)
                  or "—",
-        "hashagg": count("HashAggregate"),
+        "hashagg": nodes["HashAggregate"],
         "topk": "✓" if "TakeOrderedAndProject" in plan else "",
         "pushdown": "✓" if re.search(r"PushedFilters: \[(?!\])", plan)
                     else "",
@@ -82,18 +86,12 @@ def main() -> None:
     for name, fn in QUERIES.items():
         if name in EXECUTES_ON_BUILD:
             continue
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
-        a = audit(plan)
+        a = audit(fn(spark, sf_dir))
         oracle = "exact" if name in ORACLES else "rows"
         lines.append(
             f"| {name} | {oracle} | {a['exchanges']} | {a['joins']} "
             f"| {a['hashagg']} | {a['topk']} | {a['pushdown']} "
             f"| {a['codegen']} | {a['onepart'] or ''} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md") if __file__ else "PLANS.md"
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        os.pardir, "PLANS.md")
     with open(os.path.abspath(out), "w") as f:
