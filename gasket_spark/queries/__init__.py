@@ -110,98 +110,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver-signal manifest.
-#
-# The driver verifies queries in REGISTRATION ORDER with a bounded
-# window (~50 per round), so registration order is a verification
-# scheduler. Each query ranks by the round of its most recent driver
-# CORRECTNESS green; _load_all() registers ascending by that signal —
-# never-verified queries (rank 0) always land in the window first,
-# and the freshest greens rotate to the back. With ~127 queries and a
-# 50-window, every query gets a row within 3 rotations.
-#
-# Ranks are parsed from the committed CORRECTNESS_r{N}.json artifacts
-# at import time (see _signal_rank) — no per-round bookkeeping beyond
-# the edit ledger below.
-# ---------------------------------------------------------------------------
-
-# The newest CORRECTNESS round, and the queries whose implementation,
-# oracle, or a shared helper they call was EDITED since it: their
-# greens up to that round no longer certify the current code, so they
-# rank 1 (right behind the never-verified and rows-only groups) until
-# a newer green row lands. Git history keeps the per-round ledgers.
-_EDITED_SINCE = 14
-_EDITED: tuple[str, ...] = (
-    # changed by commit 06516e4, after the r14 CORRECTNESS run
-    "q_fingerprint_winnow", "q_dedup_containment", "q_dedup_ngram",
-    "q_dedup_components", "q_bpe_train", "q_bpe_tokens",
-    "q_theta_setops", "q_collocations",
-    # one Spark pass plus an in-memory fixpoint loop
-    "q_pagerank",
-    # cache consumers re-plumbed onto io.session_cached
-    "q_dedup_prefix", "q_dedup_edit", "q_dedup_semantic",
-    "q_dedup_semantic_incr", "q_graph_triangles", "q_graph_bfs",
-    "q_graph_sssp", "q_graph_kcore", "q_graph_labelprop",
-)
-
-
-def _signal_rank() -> dict[str, float]:
-    """Rank each query by its most recent driver verification signal,
-    read DIRECTLY from the committed CORRECTNESS_r{N}.json artifacts —
-    self-maintaining: when round N's results land, the next import
-    rotates the window with no manual bookkeeping (the failure mode
-    that froze the window between rounds 2 and 3). A hash-green row in
-    round N ranks N; a rows-only pass ranks N−0.5 (weaker signal →
-    re-verified sooner); a red or absent row contributes nothing, so
-    broken and never-checked queries always sort to the front; a
-    query in ``_EDITED`` drops to rank 1 while its signal is no newer
-    than ``_EDITED_SINCE``. Without readable artifacts (e.g. an
-    installed package without the repo root) every rank is 0 and
-    registration order stands."""
-    import json
-    import os
-    import re
-
-    rank: dict[str, float] = {}
-    root = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    rounds: list[tuple[int, str]] = []
-    try:
-        for p in os.listdir(root):
-            m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p)
-            if m:
-                rounds.append((int(m.group(1)), p))
-    except OSError:
-        pass
-    # ascending, so the LATEST round's verdict wins — including a red
-    # row DEMOTING a previously-green query back to rank 0 (a
-    # regression must re-enter the window immediately, not hide
-    # behind its stale green).
-    for rnd, p in sorted(rounds):
-        try:
-            with open(os.path.join(root, p)) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                rank[name] = float(rnd)
-            elif (row.get("err") == "no_oracle"
-                  and (row.get("spark_rows") or 0) > 0):
-                rank[name] = rnd - 0.5
-            else:
-                rank[name] = 0.0
-    for n in _EDITED:
-        # a red (rank 0) stays at the very front; a green newer than
-        # the edit ledger ends the demotion
-        if 0 < rank.get(n, 0.0) <= _EDITED_SINCE:
-            rank[n] = 1.0
-    return rank
-
-
 def free_session_caches(spark: SparkSession,
                         sweep_orphans: bool = False) -> int:
     """Session hygiene for LONG-LIVED sessions: release every entry
@@ -245,14 +153,6 @@ def _load_all() -> None:
     from gasket_spark.queries import streamingq  # noqa: F401
     from gasket_spark.queries import pipelineq  # noqa: F401
     from gasket_spark.queries import relational  # noqa: F401
-
-    rank = _signal_rank()
-    idx = {n: i for i, n in enumerate(QUERIES)}
-    ordered = sorted(QUERIES, key=lambda n: (rank.get(n, 0.0), idx[n]))
-    for reg in (QUERIES, ORACLES):
-        snapshot = dict(reg)
-        reg.clear()
-        reg.update({n: snapshot[n] for n in ordered if n in snapshot})
 
 
 _load_all()

@@ -21,17 +21,10 @@ can ship it.
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_SMALL = "/root/testdata/sf0.001"
-TABLES = ("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")
+from tests.conftest import SF_SMALL
+from tools.selfcheck import connect
 
 # Types DuckDB's pandas conversion reproduces exactly AND whose pandas
 # dtype class matches what Spark's toPandas yields for the equivalent
@@ -54,11 +47,7 @@ def oracle_registry():
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
-    return c
+    return connect(SF_SMALL)
 
 
 def test_every_oracle_final_type_is_pandas_exact(con, oracle_registry):

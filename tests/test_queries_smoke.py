@@ -1,10 +1,17 @@
-"""Fast smoke for every registered query at sf0.001 (>0 rows, stable
-schema) plus the driver entry contract. The full DuckDB oracle compare
-runs via tools/selfcheck.py at sf0.01."""
+"""Every registered query, twice: a fast smoke at sf0.001 in the engine
+session, and the full DuckDB oracle compare at sf0.01 in a vanilla
+session (``tools/selfcheck.check``: exact values, or rows-only for a
+query without an oracle). Plus the ``__spark_entry__`` contract.
+
+``tools/selfcheck.py`` runs the same compare from the command line; use
+it for the variants this suite does not cover: ``TZ=America/New_York``,
+``TZ=Asia/Kathmandu``, ``SPARK_GRAFT_SHUFFLE=7`` and sf0.1."""
+
+import os
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def _query_names():
@@ -22,6 +29,66 @@ def test_query_runs(spark, name):
     assert df.limit(1).count() >= 0  # executes the plan
 
 
+@pytest.fixture(scope="module")
+def vanilla(spark):
+    """A session on the suite's context with Spark's default SQL confs,
+    like selfcheck's default mode: every query must set up any conf it
+    needs. Query caches are keyed on the context, so they are freed
+    before the sweep (no engine-session entry serves it) and after it
+    (later modules start clean)."""
+    from gasket_spark.queries import free_session_caches
+    from gasket_spark.session import DEFAULT_CONF
+
+    free_session_caches(spark)
+    session = spark.newSession()
+    for k in DEFAULT_CONF:
+        if k.startswith("spark.sql."):
+            session.conf.unset(k)
+    session.conf.set("spark.sql.shuffle.partitions",
+                     os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    yield session
+    # nothing here holds a checkpointed frame of its own
+    free_session_caches(spark, sweep_orphans=True)
+
+
+@pytest.fixture(scope="module")
+def oracle_con():
+    from tools.selfcheck import connect
+
+    con = connect(SF_ORACLE)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _query_names())
+def test_query_matches_oracle(vanilla, oracle_con, name):
+    from gasket_spark.queries import ORACLES, QUERIES
+    from tools.selfcheck import check
+
+    got = QUERIES[name](vanilla, SF_ORACLE).toPandas()
+    want = (oracle_con.execute(ORACLES[name]).fetchdf()
+            if name in ORACLES else None)
+    reasons = check(got, want)
+    assert not reasons, "; ".join(reasons)
+
+
+def test_check_reports_each_failure_class():
+    import pandas as pd
+
+    from tools.selfcheck import check
+
+    want = pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    assert check(want[["v", "k"]].iloc[::-1], want) == []
+    assert check(want, None) == []
+    # an int64 9 and a float64 9.0 hash differently
+    (split,) = check(pd.DataFrame({"k": [9]}), pd.DataFrame({"k": [9.0]}))
+    assert split.startswith("dtype-class split on 'k': spark=integer")
+    assert check(want.head(2), want) == ["rowcount 2 != 3"]
+    (diff,) = check(want.assign(v=["a", "x", "c"]), want)
+    assert diff.startswith("values differ")
+    assert check(want.head(0), None) == ["rows-only: 0 rows"]
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as em
 
@@ -30,40 +97,6 @@ def test_entry_contract(spark):
     qs, oracles = em.queries(), em.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 15
-
-
-def test_verification_window_rotation():
-    """Registration order is the driver's verification scheduler: every
-    query with NO green CORRECTNESS row (rank 0, incl. new queries) and
-    every hand-pinned red must sort inside the first 50 registered
-    names, ahead of anything already verified — otherwise the bounded
-    driver window stops rotating (the round-3 failure mode)."""
-    from gasket_spark.queries import QUERIES, _signal_rank
-
-    names = list(QUERIES)
-    rank = _signal_rank()
-    unverified = [n for n in names if rank.get(n, 0.0) <= 0.0]
-    front = set(names[:50])
-    # empty only once every registered query has a green row
-    assert set(unverified) <= front
-    # ranks are non-decreasing along the registration order
-    sigs = [rank.get(n, 0.0) for n in names]
-    assert sigs == sorted(sigs)
-    # queries edited since the newest CORRECTNESS round must
-    # re-verify BEFORE any fresh green rotates back in: each pending
-    # edit sorts ahead of every query whose signal post-dates the
-    # demotion rank. (They may sit just past the 50-window when a
-    # large batch of brand-new queries legitimately fills it — new
-    # queries have no signal at all and go first; the edits then lead
-    # the very next round's window.)
-    from gasket_spark.queries import _EDITED, _EDITED_SINCE
-
-    pending = [n for n in _EDITED
-               if 0 < rank.get(n, 0.0) <= _EDITED_SINCE]
-    if pending:
-        last_pending = max(names.index(n) for n in pending)
-        fresh = [i for i, n in enumerate(names) if rank.get(n, 0.0) > 1.0]
-        assert not fresh or last_pending < min(fresh)
 
 
 class TestCsvRoundTrip:

@@ -1,10 +1,16 @@
-"""Local stand-in for the driver's correctness gate.
+"""Spark-vs-DuckDB oracle harness.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet tables, then compares row count, sorted
-column names, and order-insensitive values (exact equality — no
-tolerance: the engine's determinism patterns are supposed to make
-results bit-identical).
+DuckDB over the same parquet tables, then compares them with
+:func:`check`: row count, sorted column names, dtype classes and
+order-insensitive values (exact equality — no tolerance: the engine's
+determinism patterns are supposed to make results bit-identical).
+
+The Tier-1 suite runs the same check over the whole registry at sf0.01
+(``tests/test_queries_smoke.py::test_query_matches_oracle``). This CLI
+remains for the variants the suite does not cover: another session
+time zone (``TZ=America/New_York``, ``TZ=Asia/Kathmandu``), another
+shuffle partition count (``SPARK_GRAFT_SHUFFLE=7``) and sf0.1.
 
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
 """
@@ -22,6 +28,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
+
+
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per oracle table over
+    ``<sf_dir>/<table>.parquet``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+# Bound accumulated cache residency over a full-registry sweep: the
+# query layer's io.session_cached entries (pair graphs, edge table,
+# persisted plan intermediates) are session-lifetime, and ~200
+# distinct queries' worth of them crossed the JVM heap margin at sf0.1
+# (r13: OOM at query ~209, every query green in a fresh session).
+# Freeing every FREE_EVERY queries caps residency; entries rebuild on
+# demand so correctness is unaffected.
+FREE_EVERY = 60
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -60,6 +85,42 @@ def dtype_class(s: pd.Series) -> str:
     return "object"
 
 
+def check(got: pd.DataFrame, want: pd.DataFrame | None) -> list[str]:
+    """Compare a query's Spark result with its DuckDB oracle result;
+    return the failure reasons, empty on a pass. ``want`` is None for
+    a query without an oracle: the rows-only check, which fails only
+    an empty result."""
+    if want is None:
+        return [] if len(got) else ["rows-only: 0 rows"]
+    a, b = canon(got), canon(want)
+    reasons = []
+    if len(a) != len(b):
+        reasons.append(f"rowcount {len(a)} != {len(b)}")
+    if list(a.columns) != list(b.columns):
+        reasons.append(f"columns {list(a.columns)} != {list(b.columns)}")
+    if reasons:
+        return reasons
+    # Dtype-KIND audit. A result hash reads raw values, so an int64 9
+    # vs float64 9.0 split is a hash mismatch even though
+    # assert_frame_equal(check_dtype=False) coerces it equal (that
+    # masking shipped the r7+r8 q_join_grid_density red twice: DuckDB
+    # renders HUGEINT to pandas as float64). Fail loudly BEFORE the
+    # value compare when the two engines disagree on a column's dtype
+    # class.
+    splits = [f"dtype-class split on '{c}': spark={dtype_class(a[c])} "
+              f"({a[c].dtype}) vs oracle={dtype_class(b[c])} "
+              f"({b[c].dtype}) — the values would hash differently"
+              for c in a.columns if dtype_class(a[c]) != dtype_class(b[c])]
+    if splits:
+        return splits
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False,
+                                      check_exact=True)
+    except AssertionError as exc:
+        return [f"values differ: {str(exc)[:500]}"]
+    return []
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -79,28 +140,16 @@ def main() -> int:
                  .config("spark.sql.shuffle.partitions",
                          os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
                  .getOrCreate())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    con = connect(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    # Bound accumulated cache residency over a full-registry sweep:
-    # the query layer's io.session_cached entries (pair graphs, edge
-    # table, persisted plan intermediates) are session-lifetime, and
-    # ~200 distinct queries' worth of them crossed the JVM heap
-    # margin at sf0.1 (r13: OOM at query ~209, every query green in a
-    # fresh session). Freeing every N queries keeps the single-session
-    # sweep honest about per-query behavior while capping residency;
-    # entries rebuild on demand so correctness is unaffected.
-    free_every = int(os.environ.get("SPARK_GRAFT_FREE_EVERY", "60"))
     from gasket_spark.queries import free_session_caches
     n_run = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if free_every and n_run and n_run % free_every == 0:
+        if n_run and n_run % FREE_EVERY == 0:
             # sweep_orphans is safe HERE: selfcheck holds no
             # checkpointed frames of its own between queries
             freed = free_session_caches(spark, sweep_orphans=True)
@@ -109,56 +158,20 @@ def main() -> int:
         n_run += 1
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            got = fn(spark, sf_dir).toPandas()
+            want = (con.execute(oracles[name]).fetchdf()
+                    if name in oracles else None)
         except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {exc}")
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            if len(sdf) == 0:
-                failures.append(name)
-                print(f"FAIL {name}: 0 rows")
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {exc}")
-            continue
-        a, b = canon(sdf), canon(odf)
-        status = []
-        if len(a) != len(b):
-            status.append(f"rowcount {len(a)} != {len(b)}")
-        if list(a.columns) != list(b.columns):
-            status.append(f"columns {list(a.columns)} != {list(b.columns)}")
-        if not status:
-            # Dtype-KIND audit. The driver hashes raw values, so an
-            # int64 9 vs float64 9.0 split is a driver hash red even
-            # though assert_frame_equal(check_dtype=False) coerces it
-            # equal (that masking shipped the r7+r8 q_join_grid_density
-            # red twice: DuckDB renders HUGEINT to pandas as float64).
-            # Fail loudly BEFORE the value compare when the two engines
-            # disagree on a column's dtype class.
-            for c in a.columns:
-                ka, kb = dtype_class(a[c]), dtype_class(b[c])
-                if ka != kb:
-                    status.append(
-                        f"dtype-class split on '{c}': spark={ka} "
-                        f"({a[c].dtype}) vs oracle={kb} ({b[c].dtype})"
-                        " — driver would hash-mismatch")
-        if not status:
-            try:
-                pd.testing.assert_frame_equal(a, b, check_dtype=False,
-                                              check_exact=True)
-            except AssertionError as exc:
-                status.append(f"values differ: {str(exc)[:500]}")
-        if status:
-            failures.append(name)
-            print(f"FAIL {name}: {'; '.join(status)}")
+            reasons = [f"{type(exc).__name__}: {exc}"]
         else:
-            print(f"ok   {name}: {len(a)} rows match ({time.time()-t0:.1f}s)")
+            reasons = check(got, want)
+        if reasons:
+            failures.append(name)
+            print(f"FAIL {name}: {'; '.join(reasons)}")
+        else:
+            kind = "match" if name in oracles else "rows-only"
+            print(f"ok   {name}: {len(got)} rows {kind} "
+                  f"({time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
