@@ -271,21 +271,17 @@ def stamp_cached(out: str, src: str, build, version: int | str = 1) -> str:
 
 
 def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
-    """``localCheckpoint`` a DataFrame and return the persistent-RDD
-    ids the checkpoint created, so an in-memory cache can FREE the
-    blocks on eviction (``DataFrame.unpersist`` cannot release a
+    """``localCheckpoint`` a DataFrame and return the id of the
+    persistent RDD the checkpoint holds, so an in-memory cache can FREE
+    the blocks on eviction (``DataFrame.unpersist`` cannot release a
     local checkpoint — the persistence lives on the internal RDD,
     reachable only through ``SparkContext.getPersistentRDDs``).
 
-    The before/after id diff assumes no concurrent checkpoint in
-    another thread of the same session — true for the engine's
-    single-threaded query builds."""
-    spark = df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(dict(jsc.getPersistentRDDs()))
+    The id is read from the checkpointed plan itself (its
+    ``LogicalRDD``), so a persist made by another thread at the same
+    time is never taken for it."""
     out = df.localCheckpoint()
-    ids = set(dict(jsc.getPersistentRDDs())) - before
-    return out, frozenset(ids)
+    return out, frozenset({out._jdf.queryExecution().analyzed().rdd().id()})
 
 
 def free_checkpoint(spark: SparkSession, ids) -> None:

@@ -79,12 +79,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     sets filters to ``threshold``. Returns (id_a, id_b, jaccard) with
     id_a < id_b, deduplicated across bands.
     """
-    # hashed shingle sets (array<long>): computed once, persisted —
-    # feeds BOTH the signature path and the two verify-join sides, so
-    # the (relatively) expensive shingling pass runs once, not thrice.
-    # MEMORY_AND_DISK: at 100 TB this spills instead of recomputing.
+    # hashed shingle sets (array<long>): they feed the signature path
+    # and both verify-join sides; the plan persists nothing, so a
+    # long-lived session keeps no corpus-sized block per call
     sh = _with_shingles(df, text_col, id_col, n, max_doc_freq,
-                        hashed=True).persist()
+                        hashed=True)
     # docs with EMPTY shingle sets (< n tokens, NULL text, or fully
     # df-capped) never enter banding: they all share the all-sentinel
     # signature, so m such docs would generate 16·m²/2 candidate rows
@@ -563,9 +562,9 @@ def incremental_minhash_pairs(new: DataFrame, corpus: DataFrame,
     call (:func:`minhash_lsh_pairs` on ``new``).
     """
     sh_new = _with_shingles(new, text_col, id_col, n, max_doc_freq,
-                            hashed=True).persist()
+                            hashed=True)
     sh_old = _with_shingles(corpus, text_col, id_col, n, max_doc_freq,
-                            hashed=True).persist()
+                            hashed=True)
 
     def _bands(sh: DataFrame) -> DataFrame:
         # empty shingle sets excluded before banding — the same
@@ -769,13 +768,7 @@ def prefix_filter_pairs_tracked(
         .filter(F.col("jaccard") >= threshold))
     sh.unpersist(False)
     packed.unpersist(False)
-    # the tracked diff also caught sh's cache RDD (it materialized
-    # DURING the checkpoint action); after the unpersist only the
-    # checkpoint's own blocks remain — report exactly those, so a
-    # later free_checkpoint releases the result and nothing else
-    live = set(dict(
-        df.sparkSession.sparkContext._jsc.getPersistentRDDs()))
-    return out, frozenset(i for i in ids if i in live)
+    return out, ids
 
 
 def edit_distance_pairs(df: DataFrame, text_col: str = "text",

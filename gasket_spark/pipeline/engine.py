@@ -114,6 +114,7 @@ class Engine:
                 consumers = [
                     (lambda df, s=s: run_stage(s, ctx, df)) for s in group[1:]]
                 if consumers:
+                    src = src.cache()
                     out = ops.map_broadcast(src, consumers)
                     cached.append(src)
                 else:

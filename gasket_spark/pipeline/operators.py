@@ -50,14 +50,12 @@ def fork_union(dfs: Sequence[DataFrame]) -> DataFrame:
 
 def map_broadcast(src: DataFrame, consumers: Sequence[Transform]) -> DataFrame:
     """``map`` — fan-out (index.js:59-69, map arm :62): every source
-    row goes to *each* consumer; consumer outputs merge. The source is
-    cached, so N consumers don't rescan it — the reference gets this
-    for free from stream teeing; Spark needs the explicit persist.
-    The cache lives until ``src.unpersist()``: the caller releases it
-    once the last action that reads the result has run. ``Engine``
-    releases a pipeline's map sources when it builds that pipeline
-    again."""
-    src = src.cache()
+    row goes to *each* consumer; consumer outputs merge. The plan pins
+    nothing: a caller whose source is costly to recompute caches it
+    and releases it once the last action that reads the result has
+    run — the reference gets that sharing from stream teeing, which
+    ends with the pipeline. ``Engine`` caches a pipeline's map
+    sources and releases them when it builds that pipeline again."""
     return fork_union([t(src) for t in consumers])
 
 

@@ -110,43 +110,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-def free_session_caches(spark: SparkSession,
-                        sweep_orphans: bool = False) -> int:
-    """Session hygiene for LONG-LIVED sessions: release every entry
-    this session holds in ``io.session_cached`` (checkpointed pair
-    graphs and edge table, persisted plan intermediates). Entries
-    rebuild on demand, so this trades recompute for memory — the knob
-    a session running hundreds of distinct queries needs (the r13
-    catch: a full-registry sf0.1 sweep OOMed the JVM at query ~209
-    purely from ACCUMULATED cache blocks). Returns the number of
-    entries and blocks released.
-
-    ``sweep_orphans=True`` additionally unpersists EVERY remaining
-    persistent RDD in the session — the orphaned per-iteration
-    localCheckpoints iterative graph queries leave behind, which
-    ``DataFrame.unpersist`` cannot release. OPT-IN because the sweep
-    cannot tell an orphan from a checkpointed frame the CALLER still
-    holds, and unpersisting a localCheckpoint is data LOSS (lineage
-    is truncated — the next action raises, it does not rebuild).
-    Default False is always safe: cached entries rebuild on demand."""
-    from gasket_spark.io import release_session_cache
-
-    n = release_session_cache(spark)
-    if not sweep_orphans:
-        return n
-    try:
-        live = dict(spark.sparkContext._jsc.getPersistentRDDs())
-    except Exception:  # pragma: no cover - dead/stopped context
-        return n
-    for rdd in live.values():
-        try:
-            rdd.unpersist(False)
-            n += 1
-        except Exception:  # pragma: no cover - racing teardown
-            pass
-    return n
-
-
 def _load_all() -> None:
     # Import for registration side effects; keep order stable.
     from gasket_spark.queries import llm  # noqa: F401

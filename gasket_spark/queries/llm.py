@@ -2356,7 +2356,7 @@ def q_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # capture; 7.9 s -> 2.0 s noop median at sf0.1). Each sketch
         # table is ≤ k=1024 hashes per group — KBs of residency —
         # and the handles live in io.session_cached, keyed on the
-        # lineitem stamp, so a rewrite or free_session_caches
+        # lineitem stamp, so a rewrite or release_session_cache
         # releases them (the same lifecycle answer that replaced the
         # old "never persist in-function" stance here). In a real
         # pipeline the sketch TABLE is stored once and re-read — the
@@ -2563,17 +2563,10 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a, b: F.struct(a.alias("t1"), b.alias("t2"))))
         .alias("p")
     ).select("p.t1", "p.t2")
-    # persist: four consumers (pairs, both marginals, the total) read
-    # the bigram table — without the pin, Catalyst re-executes the
-    # corpus-scale bigram shuffle once PER consumer (verified:
-    # ReusedExchange does not fire across these subplans). The cache
-    # is vocab²-sized, not corpus-sized; lifetime is LRU.
-    c12 = bg.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("n12")) \
-        .persist()
-    # eager fill (r14): the two marginal broadcasts, the total, and
-    # the main join race this cache cold — each re-ran the
-    # corpus-scale bigram shuffle on partitions not yet cached
-    c12.count()
+    # four consumers (pairs, both marginals, the total) read the
+    # bigram table; the plan pins none of it, so building it fires no
+    # job and a long-lived session keeps no block per call
+    c12 = bg.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("n12"))
     c1 = c12.groupBy("t1").agg(F.sum("n12").alias("n1")) \
         .withColumnRenamed("t1", "tt1")
     c2 = c12.groupBy("t2").agg(F.sum("n12").alias("n2")) \

@@ -109,8 +109,9 @@ def q_fork_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_map_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gasket ``map`` — fan-out (index.js:62): the source is produced
-    once (cached) and every row reaches each consumer."""
+    """gasket ``map`` — fan-out (index.js:62): every row of the source
+    reaches each consumer. The 25-row nation scan is read once per
+    consumer; the plan pins nothing."""
     src = read_table(spark, sf_dir, "nation")
     return ops.map_broadcast(src, [
         lambda d: d.select(F.col("n_name").alias("s")),

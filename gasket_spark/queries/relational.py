@@ -2879,28 +2879,18 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected edge set (u < v) of the part co-purchase
-    graph: parts sharing an order are adjacent; every 10th order keeps
-    the graph a deterministic sample. Materialized once
-    (localCheckpoint) because every graph query fans it into several
-    join arms — and held per session, sf_dir and lineitem stamp
-    (``io.session_cached``): the graph queries share one edge build
-    instead of each paying the items self-join, and a rewritten
-    lineitem is never served stale edges."""
-    def _build():
-        li = read_table(spark, sf_dir, "lineitem")
-        items = (li.filter(F.col("l_orderkey") % 10 == 0)
-                 .select(F.col("l_orderkey").alias("ok"),
-                         F.col("l_partkey").alias("pk"))
-                 .distinct())
-        a, b = items.alias("a"), items.alias("b")
-        return checkpoint_tracked(
-            a.join(b, (F.col("a.ok") == F.col("b.ok"))
+    graph, as a lazy plan: parts sharing an order are adjacent; every
+    10th order keeps the graph a deterministic sample."""
+    li = read_table(spark, sf_dir, "lineitem")
+    items = (li.filter(F.col("l_orderkey") % 10 == 0)
+             .select(F.col("l_orderkey").alias("ok"),
+                     F.col("l_partkey").alias("pk"))
+             .distinct())
+    a, b = items.alias("a"), items.alias("b")
+    return (a.join(b, (F.col("a.ok") == F.col("b.ok"))
                    & (F.col("a.pk") < F.col("b.pk")))
             .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
             .distinct())
-
-    return session_cached(spark, "copurchase_edges", sf_dir, "lineitem",
-                          _build)
 
 
 _BFS_EDGE_SQL = """
@@ -2955,26 +2945,28 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     on hub nodes. All equi-joins (orderkey for edge build, node for
     degree attach, (src,dst) for closure) — no cartesian anywhere;
     the degree table is |V|-sized and AQE broadcasts it when small.
-    The edge set and the oriented edge set are each materialized ONCE
-    (localCheckpoint — the graph.py iterative convention): the edge
-    list feeds three consumers and the oriented list three self-join
-    arms, and without the cut Catalyst re-derives the whole
-    scan→join→distinct lineage per consumer (a 77-exchange plan for
-    what is logically 3 joins)."""
-    e = _copurchase_edges(spark, sf_dir)
-    deg = (e.select(F.col("u").alias("node"))
-           .unionAll(e.select(F.col("v").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    o = (e.join(du, "u").join(dv, "v")
-         .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
-                 .alias("src"),
-                 F.when(u_first, F.col("v")).otherwise(F.col("u"))
-                 .alias("dst"))
-         .localCheckpoint())
+    The oriented edge set is materialized once (``checkpoint_tracked``)
+    and held per session, sf_dir and lineitem stamp
+    (``io.session_cached``): it feeds three self-join arms, and without
+    the cut Catalyst re-derives the whole scan→join→distinct lineage
+    per arm (a 62-exchange plan for what is logically 3 joins)."""
+    def _oriented():
+        e = _copurchase_edges(spark, sf_dir)
+        deg = (e.select(F.col("u").alias("node"))
+               .unionAll(e.select(F.col("v").alias("node")))
+               .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
+        du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+        dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+        u_first = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+        return checkpoint_tracked(
+            e.join(du, "u").join(dv, "v")
+            .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
+                    .alias("src"),
+                    F.when(u_first, F.col("v")).otherwise(F.col("u"))
+                    .alias("dst")))
+
+    o = session_cached(spark, "triangles", sf_dir, "lineitem", _oriented)
     x = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     y = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     z = o.select(F.col("src").alias("a"), F.col("dst").alias("c"))
@@ -3133,34 +3125,17 @@ def _bfs_oracle_sql(max_hops: int = 4) -> str:
 @query("q_graph_bfs", oracle=_bfs_oracle_sql())
 def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS over the part co-purchase graph: minimum hop
-    distance (<= 4) from the smallest part node, by iterative
-    FRONTIER EXPANSION — the loop form for data-dependent traversals
+    distance (<= 4) from the smallest part node, by FRONTIER
+    EXPANSION — the loop form for data-dependent traversals
     (q_recursive_cte covers the in-plan WITH RECURSIVE shape; this is
     its explicit twin for graphs where a recursive path walk would
-    enumerate exponentially many walks through cycles). Each level is
-    one equi-join of the frontier against the checkpointed edge list
-    + one anti-join against the visited set, then a localCheckpoint
-    to truncate lineage — per-level cost O(frontier x avg-degree),
-    state O(visited), the scalable BFS shape. The root is a bounded
-    1-row driver scalar."""
-    e = _copurchase_edges(spark, sf_dir)
-    und = (e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(e.select(F.col("v").alias("src"),
-                              F.col("u").alias("dst"))))
-    root = und.agg(F.min("src")).collect()[0][0]
-    visited = spark.createDataFrame([(int(root), 0)],
-                                    "part_node bigint, hops int")
-    frontier = visited
-    for d in range(1, 5):
-        nxt = (und.join(frontier.select(F.col("part_node").alias("src")),
-                        "src")
-               .select(F.col("dst").alias("part_node")).distinct()
-               .join(visited, "part_node", "left_anti")
-               .withColumn("hops", F.lit(d))
-               .localCheckpoint())
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
+    enumerate exponentially many walks through cycles). One lazy edge
+    pass feeds one in-memory kernel that runs all four levels
+    (operators/graph.py:bfs_hops); the plan persists nothing."""
+    from gasket_spark.operators.graph import bfs_hops
+
+    return bfs_hops(_copurchase_edges(spark, sf_dir), "u", "v",
+                    max_hops=4).withColumnRenamed("v", "part_node")
 
 
 # ---------------------------------------------------------------------------
@@ -4096,42 +4071,16 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source WEIGHTED shortest paths (Bellman-Ford, 4 rounds)
     on the part co-purchase graph — q_graph_bfs's weighted twin.
     Edge weights are deterministic integers (1 + (u+2v) mod 7 on the
-    canonical u<v edge, identical in both directions). The Spark loop
-    is FRONTIER-BASED relaxation: each round relaxes only edges out
-    of nodes whose distance improved last round (delta-stepping's
-    core pruning — identical results to full relaxation, but late
-    rounds touch a shrinking frontier instead of the whole distance
-    map), then MIN-merges candidates into the running map; both
-    frames localCheckpoint per round to truncate lineage. Per-round
-    cost: one equi-join shuffle (frontier x edges) + one min-combine
-    shuffle, state O(|V|) — the scalable SSSP shape (GraphX Pregel
-    computes exactly this dataflow)."""
-    e = _copurchase_edges(spark, sf_dir)
-    we = e.withColumn(
+    canonical u<v edge, identical in both directions). One lazy edge
+    pass feeds one in-memory kernel that runs all four relaxation
+    rounds in int64 (operators/graph.py:shortest_paths); the plan
+    persists nothing."""
+    from gasket_spark.operators.graph import shortest_paths
+
+    e = _copurchase_edges(spark, sf_dir).withColumn(
         "w", F.lit(1) + (F.col("u") + F.lit(2) * F.col("v")) % 7)
-    und = (we.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-           .unionAll(we.select(F.col("v").alias("src"),
-                               F.col("u").alias("dst"), "w"))
-           .localCheckpoint())
-    root = und.agg(F.min("src")).collect()[0][0]
-    dist = spark.createDataFrame([(int(root), 0)],
-                                 "part_node bigint, dist bigint")
-    frontier = dist
-    for _ in range(4):
-        cand = (und.join(frontier.select(F.col("part_node").alias("src"),
-                                         F.col("dist").alias("fd")), "src")
-                .groupBy(F.col("dst").alias("part_node"))
-                .agg(F.min(F.col("fd") + F.col("w")).alias("nd")))
-        improved = (cand.join(dist, "part_node", "left")
-                    .filter(F.col("dist").isNull()
-                            | (F.col("nd") < F.col("dist")))
-                    .select("part_node", F.col("nd").alias("dist"))
-                    .localCheckpoint())
-        dist = (dist.unionByName(improved)
-                .groupBy("part_node").agg(F.min("dist").alias("dist"))
-                .localCheckpoint())
-        frontier = improved
-    return dist
+    return shortest_paths(e, "u", "v", "w", rounds=4) \
+        .withColumnRenamed("v", "part_node")
 
 
 @query(
@@ -4457,29 +4406,17 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds) on the part co-purchase graph — the degeneracy pruning
     that strips tendrils before community/robustness analysis (and
     the standard pre-filter that collapses the graph before heavier
-    iterative ops like q_graph_triangles). Each round is one degree
-    aggregate + two LEFT SEMI equi-joins restricting edges to
-    surviving endpoints, localCheckpoint truncating lineage — cost
-    per round O(|E_r|) on a monotonically shrinking edge set, state
-    exactly the live edges; the scalable peel (Pregel's vote-to-halt
-    degeneracy loop as dataflow). Bounding rounds makes the operator
-    an anytime contract both engines state identically; on this
-    graph the peel converges to the true 3-core well before 6."""
-    e = _copurchase_edges(spark, sf_dir)
-    und = (e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(e.select(F.col("v").alias("src"),
-                              F.col("u").alias("dst")))
-           .localCheckpoint())
-    for _ in range(6):
-        keep = (und.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-                .filter(F.col("d") >= 3).select("src"))
-        und = (und.join(keep, "src", "left_semi")
-               .join(keep.withColumnRenamed("src", "dst"),
-                     "dst", "left_semi")
-               .select("src", "dst")
-               .localCheckpoint())
-    return (und.groupBy(F.col("src").alias("part_node"))
-            .agg(F.count(F.lit(1)).alias("degree")))
+    iterative ops like q_graph_triangles). Each round keeps the nodes
+    of degree >= 3 and then the edges between kept nodes. One lazy
+    edge pass feeds one in-memory kernel that runs all six rounds
+    (operators/graph.py:kcore_peel); the plan persists nothing.
+    Bounding rounds makes the operator an anytime contract both
+    engines state identically; on this graph the peel converges to
+    the true 3-core well before 6."""
+    from gasket_spark.operators.graph import kcore_peel
+
+    return kcore_peel(_copurchase_edges(spark, sf_dir), "u", "v",
+                      k=3, rounds=6).withColumnRenamed("v", "part_node")
 
 
 @query(
@@ -4740,8 +4677,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     items = (li.filter(F.col("l_orderkey") % 10 == 0)
              .select(F.col("l_orderkey").alias("ok"),
-                     F.col("l_partkey").alias("pk")).distinct()
-             .localCheckpoint())
+                     F.col("l_partkey").alias("pk")).distinct())
     # n_orders joins as a broadcast 1-row aggregate (the
     # q_decayed_topk shape) — no eager driver-side count job, and
     # the plan stays lazy/self-contained
@@ -5080,31 +5016,18 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is one edge⋈label join + one (node, label) count + one
     per-node arg-max (deterministic: ties to the smallest label —
     synchronous updates + total-order tie-break make the fixture's
-    'random' algorithm exactly reproducible). Per-round cost
-    O(|E|) shuffle on the destination node; labels are node ids so
-    state is O(|V|); localCheckpoint truncates lineage per round —
-    the Pregel community-detection dataflow. Output aggregates to
-    (community, size, min member) so the full labeling is pinned
-    without a |V|-row result."""
-    e = _copurchase_edges(spark, sf_dir)
-    und = (e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(e.select(F.col("v").alias("src"),
-                              F.col("u").alias("dst")))
-           .localCheckpoint())
-    labels = (und.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    for _ in range(3):
-        cnt = (und.join(labels.withColumnRenamed("node", "src"), "src")
-               .groupBy(F.col("dst").alias("node"), "label")
-               .agg(F.count(F.lit(1)).alias("cnt")))
-        w = Window.partitionBy("node").orderBy(
-            F.col("cnt").desc(), F.col("label"))
-        labels = (cnt.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") == 1).select("node", "label")
-                  .localCheckpoint())
+    'random' algorithm exactly reproducible). One lazy edge pass
+    feeds one in-memory kernel that runs all three rounds
+    (operators/graph.py:label_propagation); the plan persists
+    nothing. Output aggregates to (community, size, min member) so
+    the full labeling is pinned without a |V|-row result."""
+    from gasket_spark.operators.graph import label_propagation
+
+    labels = label_propagation(_copurchase_edges(spark, sf_dir), "u", "v",
+                               rounds=3)
     return (labels.groupBy(F.col("label").alias("community"))
             .agg(F.count(F.lit(1)).alias("n_nodes"),
-                 F.min("node").cast("bigint").alias("min_node")))
+                 F.min("v").cast("bigint").alias("min_node")))
 
 
 @query(

@@ -1,13 +1,16 @@
 """Graph-operator tests: fixed-point PageRank determinism and
-structural correctness, and the connected-components kernel against a
+structural correctness, the connected-components kernel against a
 union-find model (components are also covered via the dedup suites
-and the recursive-CTE oracle)."""
+and the recursive-CTE oracle), and the four fixed-round kernels
+(BFS, SSSP, k-core, label propagation) against plain-Python models
+and the co-purchase queries built on them."""
 
 import random
 from collections import Counter
 
 import pytest
 
+from gasket_spark.operators import graph
 from gasket_spark.operators.graph import connected_components, pagerank
 from tests.conftest import jobs_fired
 
@@ -128,12 +131,10 @@ class TestPageRankKernel:
         assert set(dict(jsc.getPersistentRDDs())) - before == set()
 
     def test_edge_guard_raises_above_limit(self, spark, monkeypatch):
-        from gasket_spark.operators import graph
-
-        monkeypatch.setattr(graph, "PAGERANK_MAX_EDGES", 2)
+        monkeypatch.setattr(graph, "GRAPH_MAX_EDGES", 2)
         df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
                                    "src long, dst long")
-        with pytest.raises(Exception, match="PAGERANK_MAX_EDGES"):
+        with pytest.raises(Exception, match="GRAPH_MAX_EDGES"):
             graph.pagerank(df, max_iter=2).collect()
 
 
@@ -203,12 +204,10 @@ class TestComponentsKernel:
         assert got == {(3, 3), (4, 3)}
 
     def test_edge_guard_raises_above_limit(self, spark, monkeypatch):
-        from gasket_spark.operators import graph
-
-        monkeypatch.setattr(graph, "COMPONENTS_MAX_EDGES", 2)
+        monkeypatch.setattr(graph, "GRAPH_MAX_EDGES", 2)
         df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
                                    "id_a long, id_b long")
-        with pytest.raises(Exception, match="COMPONENTS_MAX_EDGES"):
+        with pytest.raises(Exception, match="GRAPH_MAX_EDGES"):
             graph.connected_components(df).collect()
 
     def test_q_dedup_components_builds_lazily_on_warm_pairs(self, spark):
@@ -293,3 +292,115 @@ class TestLabelProp:
         assert sum(r["n_nodes"] for r in rows) == len(nodes)
         assert all(r["community"] in nodes for r in rows)
         assert all(r["min_node"] in nodes for r in rows)
+
+
+def _model_arcs(edges):
+    """Both directions of every distinct undirected edge."""
+    pairs = {(min(a, b), max(a, b)) for a, b in edges}
+    return [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+
+
+def _model_bfs(edges, max_hops):
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    frontier = {min(adj)}
+    hops = {min(adj): 0}
+    for d in range(1, max_hops + 1):
+        frontier = {m for n in frontier for m in adj[n]} - set(hops)
+        hops.update((m, d) for m in frontier)
+    return hops
+
+
+def _model_sssp(edges, rounds):
+    arcs = [(a, b, c) for a, b, c in edges] + \
+        [(b, a, c) for a, b, c in edges]
+    dist = {min(a for a, _, _ in arcs): 0}
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for a, b, c in arcs:
+            if a in dist and dist[a] + c < nxt.get(b, 1 << 62):
+                nxt[b] = dist[a] + c
+        dist = nxt
+    return dist
+
+
+def _model_kcore(edges, k, rounds):
+    live = _model_arcs(edges)
+    for _ in range(rounds):
+        deg = Counter(a for a, _ in live)
+        live = [(a, b) for a, b in live if deg[a] >= k and deg[b] >= k]
+    return dict(Counter(a for a, _ in live))
+
+
+def _model_labelprop(edges, rounds):
+    arcs = _model_arcs(edges)
+    label = {v: v for arc in arcs for v in arc}
+    for _ in range(rounds):
+        cnt = Counter((b, label[a]) for a, b in arcs)
+        best = {}
+        for (node, lab), c in cnt.items():
+            if node not in best or (-c, lab) < best[node]:
+                best[node] = (-c, lab)
+        label = {v: lab for v, (_, lab) in best.items()}
+    return label
+
+
+_FIXED_ROUND = {
+    "bfs_hops": (lambda df: graph.bfs_hops(df, "a", "b", max_hops=4),
+                 lambda e: _model_bfs(e, 4)),
+    "shortest_paths": (
+        lambda df: graph.shortest_paths(df, "a", "b", "w", rounds=4),
+        lambda e: _model_sssp(e, 4)),
+    "kcore_peel": (lambda df: graph.kcore_peel(df, "a", "b", k=3, rounds=6),
+                   lambda e: _model_kcore(e, 3, 6)),
+    "label_propagation": (
+        lambda df: graph.label_propagation(df, "a", "b", rounds=3),
+        lambda e: _model_labelprop(e, 3)),
+}
+
+
+class TestFixedRoundKernels:
+    @pytest.mark.parametrize("parts", [1, 7])
+    @pytest.mark.parametrize("op", sorted(_FIXED_ROUND))
+    def test_matches_python_model(self, spark, op, parts):
+        """Each kernel equals its plain-Python model on seeded graphs
+        with duplicate, reversed and self edges, under any input
+        partitioning."""
+        run, model = _FIXED_ROUND[op]
+        for seed in range(3):
+            edges = _random_pair_graph(seed, as_string=False)
+            rnd = random.Random(seed)
+            rows = [(a, b, rnd.randint(1, 7)) for a, b in edges]
+            df = spark.createDataFrame(rows, "a long, b long, w long")
+            got = {r[0]: r[1] for r in run(df.repartition(parts)).collect()}
+            want = model(rows if op == "shortest_paths" else edges)
+            assert got == want, (op, seed, parts)
+
+    @pytest.mark.parametrize("op", sorted(_FIXED_ROUND))
+    def test_edge_guard_raises_above_limit(self, spark, monkeypatch, op):
+        monkeypatch.setattr(graph, "GRAPH_MAX_EDGES", 2)
+        df = spark.createDataFrame([(1, 2, 1), (2, 3, 1), (3, 1, 1)],
+                                   "a long, b long, w long")
+        with pytest.raises(Exception, match="GRAPH_MAX_EDGES"):
+            _FIXED_ROUND[op][0](df).collect()
+
+    @pytest.mark.parametrize("name", ["q_graph_bfs", "q_graph_sssp",
+                                      "q_graph_kcore",
+                                      "q_graph_labelprop"])
+    def test_query_builds_lazily_and_persists_nothing(self, spark, name):
+        """The query's build fires no job beyond its table scan's
+        schema read, and its action leaves no persistent RDD behind."""
+        from gasket_spark.io import read_table
+        from gasket_spark.queries import QUERIES
+        from tests.conftest import SF_SMALL
+
+        _, scan_jobs = jobs_fired(
+            spark, lambda: read_table(spark, SF_SMALL, "lineitem"))
+        jsc = spark.sparkContext._jsc
+        before = set(dict(jsc.getPersistentRDDs()))
+        df, n_jobs = jobs_fired(spark, lambda: QUERIES[name](spark, SF_SMALL))
+        assert n_jobs == scan_jobs
+        assert df.collect()
+        assert set(dict(jsc.getPersistentRDDs())) <= before

@@ -1969,18 +1969,16 @@ class TestTwoLevelSemanticDedup:
 
 
 class TestSessionCacheHygiene:
-    def test_free_session_caches_releases_everything_and_rebuilds(
+    def test_release_session_cache_frees_all_and_rebuilds(
             self, spark):
-        """free_session_caches releases EVERY session-resident block —
+        """release_session_cache releases EVERY block the queries pin —
         each kind of io.session_cached entry (checkpointed pairs,
         operator-tracked checkpoint ids, persisted frames, the
-        checkpointed edge table) AND, on opt-in, the orphaned
-        per-call localCheckpoints iterative queries leave behind (the
-        r13 catch: a full-registry sf0.1 sweep OOMed at query ~209
-        purely from accumulated blocks) — and everything rebuilds on
-        demand."""
-        from gasket_spark.io import SESSION_CACHE
-        from gasket_spark.queries import QUERIES, free_session_caches
+        checkpointed triangles edge set) — so a long-lived session
+        does not grow with every query, and every query rebuilds on
+        demand to the same result."""
+        from gasket_spark.io import SESSION_CACHE, release_session_cache
+        from gasket_spark.queries import QUERIES
 
         sf = SF_SMALL
         jsc = spark.sparkContext._jsc
@@ -1988,29 +1986,15 @@ class TestSessionCacheHygiene:
         def live():
             return set(dict(jsc.getPersistentRDDs()))
 
-        # start from an empty session, so every block below is ours
-        free_session_caches(spark, sweep_orphans=True)
+        release_session_cache(spark)
+        before = live()
         counts = {q: QUERIES[q](spark, sf).count()
                   for q in ("q_dedup_ngram", "q_dedup_prefix",
-                            "q_fingerprint_winnow")}
-        held = live()
-        counts["q_graph_triangles"] = \
-            QUERIES["q_graph_triangles"](spark, sf).count()
-        edge_ids = {h for k, (_, hs) in SESSION_CACHE.items()
-                    if k[0] == "copurchase_edges" for h in hs}
-        orphans = live() - held - edge_ids
-        assert edge_ids and orphans
-        # default: cached entries only — always safe, rebuilds on
-        # demand; the triangles per-call localCheckpoint stays (an
-        # orphan the default must NOT touch: a caller-held checkpoint
-        # is indistinguishable, and unpersisting one is data loss)
-        assert free_session_caches(spark) == 4
+                            "q_fingerprint_winnow", "q_graph_triangles")}
+        assert live() - before
+        assert release_session_cache(spark) == 4
         assert not SESSION_CACHE
-        assert live() == orphans
-        # opt-in sweep releases the orphans too
-        free_session_caches(spark, sweep_orphans=True)
-        assert not live()
-        # rebuild on demand, same results
+        assert live() <= before
         for q, n in counts.items():
             assert QUERIES[q](spark, sf).count() == n
 

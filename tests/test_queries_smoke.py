@@ -22,24 +22,31 @@ def _query_names():
 
 @pytest.mark.parametrize("name", _query_names())
 def test_query_runs(spark, name):
+    """The query runs, and every block it pins is owned: once the
+    session cache is released, no persistent RDD it made is left."""
+    from gasket_spark.io import release_session_cache
     from gasket_spark.queries import QUERIES
 
+    jsc = spark.sparkContext._jsc
+    before = set(dict(jsc.getPersistentRDDs()))
     df = QUERIES[name](spark, SF_SMALL)
     assert len(df.columns) > 0
     assert df.limit(1).count() >= 0  # executes the plan
+    release_session_cache(spark)
+    assert set(dict(jsc.getPersistentRDDs())) <= before
 
 
 @pytest.fixture(scope="module")
 def vanilla(spark):
     """A session on the suite's context with Spark's default SQL confs,
     like selfcheck's default mode: every query must set up any conf it
-    needs. Query caches are keyed on the context, so they are freed
+    needs. Query caches are keyed on the context, so they are released
     before the sweep (no engine-session entry serves it) and after it
     (later modules start clean)."""
-    from gasket_spark.queries import free_session_caches
+    from gasket_spark.io import release_session_cache
     from gasket_spark.session import DEFAULT_CONF
 
-    free_session_caches(spark)
+    release_session_cache(spark)
     session = spark.newSession()
     for k in DEFAULT_CONF:
         if k.startswith("spark.sql."):
@@ -47,8 +54,7 @@ def vanilla(spark):
     session.conf.set("spark.sql.shuffle.partitions",
                      os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     yield session
-    # nothing here holds a checkpointed frame of its own
-    free_session_caches(spark, sweep_orphans=True)
+    release_session_cache(spark)
 
 
 @pytest.fixture(scope="module")

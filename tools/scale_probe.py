@@ -1,5 +1,6 @@
-"""Scale-validate the two iterative heavies (q_pagerank,
-q_dedup_components) at ~sf1 (10x the bench scale).
+"""Scale-validate the iterative heavies (q_pagerank,
+q_dedup_components, the co-purchase graph queries) and the banded-LSH
+and streaming state families at ~sf1 (10x the bench scale).
 
 Usage: python tools/scale_probe.py [base_sf_dir] [out_dir]
 
@@ -13,10 +14,13 @@ Builds a 10x corpus from sf0.1 by writing 10 key-shifted replicas:
   of the same problem, not a 100x pair explosion from cross-replica
   duplicates).
 
-Then times both queries at the base SF and at 10x on the same session
-and prints a markdown table. Both queries are job-overhead-bound at
-sf0.1 (fixed per-iteration scheduling cost dominates), so the
-expectation at 10x data is a wall-time ratio well under 10x.
+Then times each query at the base SF and at 10x on the same session
+and prints a markdown table. The iterative queries are
+job-overhead-bound at sf0.1 (fixed per-job scheduling cost
+dominates), so the expectation at 10x data is a wall-time ratio well
+under 10x. It also prints the co-purchase edge count at each scale
+against ``GRAPH_MAX_EDGES``, the size contract of the one worker that
+runs each graph kernel.
 """
 
 from __future__ import annotations
@@ -134,8 +138,15 @@ def main() -> None:
         build_10x_embeddings(spark, base, out)
         print(f"built 10x embeddings in {time.time() - t0:.1f}s -> {out}")
 
+    from gasket_spark.operators.graph import GRAPH_MAX_EDGES
     from gasket_spark.queries import QUERIES
+    from gasket_spark.queries.relational import _copurchase_edges
 
+    for label, d in [("sf0.1", base), ("sf1 (10x)", out)]:
+        n = _copurchase_edges(spark, d).count()
+        print(f"co-purchase edges at {label}: {n} "
+              f"({n / GRAPH_MAX_EDGES:.2%} of GRAPH_MAX_EDGES="
+              f"{GRAPH_MAX_EDGES})")
     print("| query | sf | rows | wall (s) | per-iteration (s) |")
     print("|---|---|---|---|---|")
     # iterative heavies + the banded-LSH join family (the probe's
@@ -151,7 +162,10 @@ def main() -> None:
                          ("q_dedup_minhash", None),
                          ("q_dedup_incremental", None),
                          ("q_graph_triangles", None),
-                         ("q_graph_kcore", 6),
+                         ("q_graph_bfs", None),
+                         ("q_graph_sssp", None),
+                         ("q_graph_kcore", None),
+                         ("q_graph_labelprop", None),
                          ("q_resample_interp", None),
                          ("q_concurrency_peak", None),
                          ("q_sim_maxsim", None),

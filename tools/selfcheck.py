@@ -39,16 +39,6 @@ def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-# Bound accumulated cache residency over a full-registry sweep: the
-# query layer's io.session_cached entries (pair graphs, edge table,
-# persisted plan intermediates) are session-lifetime, and ~200
-# distinct queries' worth of them crossed the JVM heap margin at sf0.1
-# (r13: OOM at query ~209, every query green in a fresh session).
-# Freeing every FREE_EVERY queries caps residency; entries rebuild on
-# demand so correctness is unaffected.
-FREE_EVERY = 60
-
-
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize for order-insensitive compare: sort columns by
     name, normalize dtypes, sort rows by all columns."""
@@ -144,18 +134,9 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    from gasket_spark.queries import free_session_caches
-    n_run = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if n_run and n_run % FREE_EVERY == 0:
-            # sweep_orphans is safe HERE: selfcheck holds no
-            # checkpointed frames of its own between queries
-            freed = free_session_caches(spark, sweep_orphans=True)
-            print(f"-- freed {freed} session cache entries/blocks "
-                  f"after {n_run} queries")
-        n_run += 1
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
