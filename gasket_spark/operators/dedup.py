@@ -66,6 +66,31 @@ def _with_shingles(df: DataFrame, text_col: str, id_col: str,
     return out
 
 
+def _banded_shingles(df: DataFrame, text_col: str, id_col: str, n: int,
+                     max_doc_freq: int | None, num_hashes: int,
+                     bands: int) -> DataFrame:
+    """(id, sh, bands): each doc's hashed shingle set (array<long>) and
+    its MinHash band hashes, shuffled by id. Readers that need the
+    same columns share one exchange without a persist: the two
+    band-join sides of :func:`minhash_lsh_pairs` read the (id, bands)
+    one and its two verify-join sides the (id, sh) one, so the
+    shingling runs twice per doc, not once per reader.
+
+    Docs with EMPTY shingle sets (< n tokens, NULL text, or fully
+    df-capped) are dropped: they all share the all-sentinel
+    signature, so m such docs would generate 16·m²/2 candidate rows
+    that the verify then discards at jaccard = 0 < threshold — the
+    one quadratic hole in the band join (r13 review catch; lossless
+    for any threshold > 0 because an empty set's jaccard is 0)."""
+    return (_with_shingles(df, text_col, id_col, n, max_doc_freq,
+                           hashed=True)
+            .filter(F.size("sh") > 0)
+            .select(id_col, "sh",
+                    T.minhash_band_hashes(F.col("sh"), num_hashes, bands)
+                    .alias("bands"))
+            .repartition(id_col))
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       num_hashes: int = 64, bands: int = 16,
@@ -79,22 +104,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     sets filters to ``threshold``. Returns (id_a, id_b, jaccard) with
     id_a < id_b, deduplicated across bands.
     """
-    # hashed shingle sets (array<long>): they feed the signature path
-    # and both verify-join sides; the plan persists nothing, so a
-    # long-lived session keeps no corpus-sized block per call
-    sh = _with_shingles(df, text_col, id_col, n, max_doc_freq,
-                        hashed=True)
-    # docs with EMPTY shingle sets (< n tokens, NULL text, or fully
-    # df-capped) never enter banding: they all share the all-sentinel
-    # signature, so m such docs would generate 16·m²/2 candidate rows
-    # that the verify then discards at jaccard = 0 < threshold — the
-    # one quadratic hole in the band join (r13 review catch; lossless
-    # for any threshold > 0 because an empty set's jaccard is 0)
-    sig = sh.filter(F.size("sh") > 0).select(
-        id_col,
-        T.minhash_band_hashes(F.col("sh"), num_hashes, bands)
-        .alias("bands"))
-    banded = sig.select(
+    sh = _banded_shingles(df, text_col, id_col, n, max_doc_freq,
+                          num_hashes, bands)
+    banded = sh.select(
         id_col, F.posexplode("bands").alias("band_idx", "band_hash"))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -561,21 +573,13 @@ def incremental_minhash_pairs(new: DataFrame, corpus: DataFrame,
     ``threshold``. Self-duplicates WITHIN the new batch are a separate
     call (:func:`minhash_lsh_pairs` on ``new``).
     """
-    sh_new = _with_shingles(new, text_col, id_col, n, max_doc_freq,
-                            hashed=True)
-    sh_old = _with_shingles(corpus, text_col, id_col, n, max_doc_freq,
-                            hashed=True)
+    sh_new, sh_old = (
+        _banded_shingles(d, text_col, id_col, n, max_doc_freq,
+                         num_hashes, bands) for d in (new, corpus))
 
     def _bands(sh: DataFrame) -> DataFrame:
-        # empty shingle sets excluded before banding — the same
-        # all-sentinel quadratic hole as minhash_lsh_pairs (lossless:
-        # empty-set jaccard is 0 < threshold)
-        return sh.filter(F.size("sh") > 0).select(
-            id_col,
-            T.minhash_band_hashes(F.col("sh"), num_hashes, bands)
-            .alias("bands")) \
-            .select(id_col,
-                    F.posexplode("bands").alias("band_idx", "band_hash"))
+        return sh.select(
+            id_col, F.posexplode("bands").alias("band_idx", "band_hash"))
 
     cand = (
         _bands(sh_new).alias("a")

@@ -177,9 +177,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     which is the arithmetic of the unrolled SQL oracle
     (queries/relational.py:_pagerank_oracle). The returned DataFrame
     is a lazy plan: building it fires no job and persists nothing.
-    Edges with a NULL endpoint are dropped; an empty edge set gives an empty
-    result. Returns (v, rank) with rank scaled back to doubles summing
-    ≈ 1."""
+    Edges with a NULL endpoint are dropped; an empty edge set gives an
+    empty result. Returns (v, rank) with rank scaled back to doubles
+    summing ≈ 1."""
     SCALE = 1_000_000_000_000
     d_num, d_den = int(damping * 100), 100
     out = _edge_pass(edges, src, dst).dropDuplicates()

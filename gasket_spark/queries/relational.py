@@ -28,8 +28,8 @@ from pyspark.sql.types import (
 
 from gasket_spark.functions.numeric import iscaled, money_avg, money_sum
 from gasket_spark.io import (
-    checkpoint_tracked, df_to_ndjson, read_table, session_cached,
-    stamp_cached,
+    checkpoint_tracked, df_to_ndjson, free_checkpoint, read_table,
+    session_cached, stamp_cached,
 )
 from gasket_spark.queries import query
 
@@ -2949,9 +2949,12 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and held per session, sf_dir and lineitem stamp
     (``io.session_cached``): it feeds three self-join arms, and without
     the cut Catalyst re-derives the whole scan→join→distinct lineage
-    per arm (a 62-exchange plan for what is logically 3 joins)."""
+    per arm (a 62-exchange plan for what is logically 3 joins). The
+    edge set it is built from is checkpointed too, since the
+    orientation reads it three times, and freed once the oriented set
+    holds its own blocks."""
     def _oriented():
-        e = _copurchase_edges(spark, sf_dir)
+        e, e_ids = checkpoint_tracked(_copurchase_edges(spark, sf_dir))
         deg = (e.select(F.col("u").alias("node"))
                .unionAll(e.select(F.col("v").alias("node")))
                .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
@@ -2959,12 +2962,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
         u_first = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        return checkpoint_tracked(
+        o = checkpoint_tracked(
             e.join(du, "u").join(dv, "v")
             .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
                     .alias("src"),
                     F.when(u_first, F.col("v")).otherwise(F.col("u"))
                     .alias("dst")))
+        free_checkpoint(spark, e_ids)
+        return o
 
     o = session_cached(spark, "triangles", sf_dir, "lineitem", _oriented)
     x = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
